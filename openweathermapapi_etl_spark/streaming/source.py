@@ -26,6 +26,7 @@ import json
 import os
 from collections.abc import Callable, Iterator
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -99,8 +100,12 @@ def make_batch_processor(
         # One fetch per city, driver-side; any failure aborts the batch
         # before anything is written (all-or-nothing, A7).
         docs = [fetcher(city) for city in city_list]
+        # Built from an Arrow table, the batch is a LocalRelation whose
+        # size Catalyst knows, so the merge broadcasts it and never
+        # shuffles the table; a list-built frame is a Python-RDD scan of
+        # unknown size and gets a sort-merge join over the whole table.
         raw = spark.createDataFrame(
-            [(json.dumps(d),) for d in docs], "value string"
+            pa.table({"value": pa.array([json.dumps(d) for d in docs], pa.string())})
         )
         # from_json with the explicit schema — the same spelling the
         # distributed twin uses; the old createDataFrame→.rdd→

@@ -4,11 +4,14 @@ version swap."""
 
 from __future__ import annotations
 
+import datetime
 import os
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from openweathermapapi_etl_spark.operators import merge as merge_mod
 from openweathermapapi_etl_spark.operators.merge import (
     VersionedParquetTable,
     dedup_last_write_wins,
@@ -2507,3 +2510,173 @@ def test_dedup_tolerates_map_columns_with_order_col(spark):
     maps_only = df.select("k", "attrs")
     with _pytest.raises(ValueError, match="order_col"):
         dedup_last_write_wins(maps_only, ["k"])
+
+
+# -- file-pruned unpartitioned upsert ----------------------------------------
+
+WX_KEYS = ["Time", "City_Name"]
+
+
+def _wx(spark, rows):
+    return spark.createDataFrame(
+        rows, "Time timestamp, City_Name string, Temperature double"
+    )
+
+
+def _wx_rows(table, spark, version=None):
+    df = table.read(spark) if version is None else table.read_version(spark, version)
+    return sorted(
+        (tuple(r) for r in df.collect()),
+        key=lambda r: (r[0] is not None, r[0] or 0, r[1]),
+    )
+
+
+def _t(h):
+    return datetime.datetime(2023, 7, 1, h)
+
+
+SEED = [(_t(h), c, float(h)) for h in range(4) for c in ("A", "B")] + [
+    (None, "A", -1.0)
+]
+
+
+@pytest.fixture
+def file_pruned(monkeypatch):
+    """Every unpartitioned upsert takes the file-pruned path."""
+    monkeypatch.setattr(merge_mod, "_FILE_PRUNE_MIN_BYTES", 0)
+
+
+def _seeded(spark, tmp_path, retain=2):
+    table = VersionedParquetTable(str(tmp_path / "wx"), retain=retain)
+    table.overwrite(_wx(spark, SEED).repartition(4))  # several data files
+    return table
+
+
+def _linked_files(table) -> set[str]:
+    """Data files of the current version that share an inode with an
+    older version (hard-linked, not rewritten)."""
+    d = table._version_dir(table.current_version())
+    return {
+        f
+        for f in table._data_file_sizes(table.current_version())
+        if os.stat(os.path.join(d, f)).st_nlink > 1
+    }
+
+
+def test_file_pruned_upsert_links_untouched_files_and_updates_null_key(
+    spark, tmp_path, file_pruned
+):
+    """A batch holding the NULL-Time key rewrites only the file that
+    holds it; the other seed files are hard-linked with their .crc
+    siblings. A later batch updates the NULL key again (NULL-safe
+    detection and merge): still exactly one NULL-key row."""
+    table = _seeded(spark, tmp_path)
+    seed_files = set(table._data_file_sizes(table.current_version()))
+    assert len(seed_files) == 4
+    table.upsert(spark, _wx(spark, [(None, "A", 5.0), (_t(9), "B", 9.0)]), WX_KEYS)
+    linked = _linked_files(table)
+    assert linked < seed_files and len(linked) == 3
+    d = table._version_dir(table.current_version())
+    for f in linked:
+        if os.path.exists(os.path.join(table._version_dir(1), f".{f}.crc")):
+            assert os.stat(os.path.join(d, f".{f}.crc")).st_nlink > 1
+    table.upsert(spark, _wx(spark, [(None, "A", 6.0)]), WX_KEYS)
+    want = sorted(
+        [r for r in SEED if r[0] is not None] + [(_t(9), "B", 9.0)],
+        key=lambda r: (r[0], r[1]),
+    )
+    assert _wx_rows(table, spark) == [(None, "A", 6.0)] + want
+
+
+def test_file_pruned_upsert_same_key_conflict_and_idempotent_reapply(
+    spark, tmp_path, file_pruned
+):
+    """Same-key conflicts inside one batch resolve last-write-wins by
+    ``order_col`` on the pruned path, and re-applying the batch changes
+    nothing."""
+    table = VersionedParquetTable(str(tmp_path / "kv"))
+    table.overwrite(
+        make_df(spark, [(k, 0, f"old_{k}") for k in "abcdefgh"]).repartition(4)
+    )
+    batch = make_df(
+        spark, [("b", 1, "first"), ("b", 3, "last"), ("b", 2, "mid"), ("z", 1, "new")]
+    )
+    want = {(k, 0, f"old_{k}") for k in "acdefgh"} | {
+        ("b", 3, "last"),
+        ("z", 1, "new"),
+    }
+    table.upsert(spark, batch, keys=["k"], order_col="ord")
+    assert _rows(table.read(spark)) == want
+    assert _linked_files(table)  # the pruned path ran
+    table.upsert(spark, batch, keys=["k"], order_col="ord")
+    assert _rows(table.read(spark)) == want
+    assert table.read(spark).count() == len(want)
+
+
+def test_file_pruned_previous_version_readable_after_source_vacuumed(
+    spark, tmp_path, file_pruned
+):
+    """retain=2: v3's commit vacuums v1, whose files v2 hard-linked.
+    v2 stays time-travel readable (links keep the inodes alive)."""
+    table = _seeded(spark, tmp_path, retain=2)
+    v2 = table.upsert(spark, _wx(spark, [(_t(0), "A", 10.0)]), WX_KEYS)
+    v2_rows = _wx_rows(table, spark)
+    v3 = table.upsert(spark, _wx(spark, [(_t(1), "B", 11.0)]), WX_KEYS)
+    assert 1 not in table.versions() and {v2, v3} <= set(table.versions())
+    assert _wx_rows(table, spark, v2) == v2_rows
+    assert (_t(1), "B", 11.0) in _wx_rows(table, spark)
+
+
+def test_file_pruned_failure_before_pointer_swap_keeps_previous_version(
+    spark, tmp_path, file_pruned, monkeypatch
+):
+    """A failure after the data write but before the pointer swap (here:
+    linking the untouched files) leaves the previous version current
+    and unchanged; the next upsert succeeds."""
+    table = _seeded(spark, tmp_path)
+    before_version, before = table.current_version(), _wx_rows(table, spark)
+
+    def broken_link(src, dst):
+        raise OSError(5, "injected link failure")
+
+    with monkeypatch.context() as m:
+        m.setattr(VersionedParquetTable, "_link_file", staticmethod(broken_link))
+        with pytest.raises(OSError, match="injected"):
+            table.upsert(spark, _wx(spark, [(_t(0), "A", 7.0)]), WX_KEYS)
+    assert table.current_version() == before_version
+    assert _wx_rows(table, spark) == before
+    table.upsert(spark, _wx(spark, [(_t(0), "A", 7.0)]), WX_KEYS)
+    assert (_t(0), "A", 7.0) in _wx_rows(table, spark)
+    assert len(_wx_rows(table, spark)) == len(before)
+
+
+def test_file_pruned_upsert_widening_batch_rewrites_whole_table(
+    spark, tmp_path, file_pruned
+):
+    """A batch whose column type is wider than the table's (bigint into
+    int) would leave files of two types in one version if its files
+    were linked; the pruned path falls back to the whole-table rewrite,
+    which widens every file, as below the size cutoff."""
+    table = VersionedParquetTable(str(tmp_path / "wide"))
+    table.overwrite(make_df(spark, [(k, 0, k) for k in "abcd"]).repartition(2))
+    wide = spark.createDataFrame([("a", 2**40, "a2")], "k string, ord bigint, val string")
+    table.upsert(spark, wide, keys=["k"])
+    assert not _linked_files(table)
+    out = table.read(spark)
+    assert dict(out.dtypes)["ord"] == "bigint"
+    assert _rows(out) == {("a", 2**40, "a2")} | {(k, 0, k) for k in "bcd"}
+
+
+def test_file_pruned_upsert_after_mor_delete_keeps_rows_deleted(
+    spark, tmp_path, file_pruned
+):
+    """Merge-on-read tombstones live beside the version, not in its
+    files: linking the untouched files into a version without the side
+    file would resurrect the deleted rows. Such a version takes the
+    whole-table rewrite."""
+    table = _seeded(spark, tmp_path)
+    table.delete_mor(spark, _wx(spark, [(_t(2), "A", 0.0)]), WX_KEYS)
+    table.upsert(spark, _wx(spark, [(_t(9), "B", 9.0)]), WX_KEYS)
+    got = _wx_rows(table, spark)
+    assert (_t(2), "A", 2.0) not in got and (_t(9), "B", 9.0) in got
+    assert len(got) == len(SEED)

@@ -33,6 +33,7 @@ except ImportError:  # pragma: no cover
 
 from pyspark.sql import Row
 
+from openweathermapapi_etl_spark.operators import merge
 from openweathermapapi_etl_spark.operators.merge import (
     ConcurrentWriteError,
     VersionedParquetTable,
@@ -281,13 +282,22 @@ def _run_sequence(spark, root: str, partition_by, ops, retain=10) -> None:
 
 
 @pytest.mark.parametrize(
-    "partition_by,retain",
+    "partition_by,retain,file_pruned",
     # retain=2 runs the SAME alphabet under vacuum contention (round-9
     # judge Next #5): retention actually fires mid-sequence, so staged
     # WAP slots, branch pins, claimed-but-uncommitted OCC slots, and
     # rollback targets must all survive (or be refused) while old
-    # snapshots are reclaimed around them.
-    [(None, 10), ("val", 10), (None, 2), ("val", 2)],
+    # snapshots are reclaimed around them. The ``pruned`` rows drop the
+    # size cutoff to 0, so every unpartitioned upsert takes the
+    # file-pruned path (touched files merged, the rest hard-linked).
+    [
+        pytest.param(None, 10, False, id="None-10"),
+        pytest.param("val", 10, False, id="val-10"),
+        pytest.param(None, 2, False, id="None-2"),
+        pytest.param("val", 2, False, id="val-2"),
+        pytest.param(None, 10, True, id="None-10-pruned"),
+        pytest.param(None, 2, True, id="None-2-pruned"),
+    ],
 )
 @given(ops=st.lists(_op, min_size=1, max_size=6))
 @settings(
@@ -298,8 +308,10 @@ def _run_sequence(spark, root: str, partition_by, ops, retain=10) -> None:
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 def test_random_op_sequences_match_dict_model(
-    spark, tmp_path_factory, partition_by, retain, ops
+    spark, tmp_path_factory, monkeypatch, partition_by, retain, file_pruned, ops
 ):
+    if file_pruned:
+        monkeypatch.setattr(merge, "_FILE_PRUNE_MIN_BYTES", 0)
     _run_sequence(
         spark,
         str(tmp_path_factory.mktemp("model")),

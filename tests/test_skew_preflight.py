@@ -61,6 +61,8 @@ def test_estimate_mode_finds_planted_hot_key(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
+    from openweathermapapi_etl_spark.session import conf_window
+
     t = _load_tool()
     sf = str(tmp_path / "sfskew")
     _os.makedirs(sf)
@@ -72,14 +74,15 @@ def test_estimate_mode_finds_planted_hot_key(spark, tmp_path):
     )
     df.write.parquet(_os.path.join(sf, "lineitem.parquet"))
 
-    old = spark.conf.get(
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", None
-    )
-    try:
-        spark.conf.set(
-            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-            "256MB",
-        )
+    threshold = "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes"
+    # Pin the partition count: the prediction splits the keys over
+    # spark.sql.shuffle.partitions, which the session sizes from the
+    # core count (max(cpus, 8)). At 8 the planted key's partition is
+    # only ~4.4x the median, under Spark's split factor 5; at 32 it is
+    # far past it on any host.
+    with conf_window(
+        spark, {"spark.sql.shuffle.partitions": "32", threshold: "256MB"}
+    ):
         out = t.run_preflight(spark, sf, "lineitem", "l_orderkey")
         assert out["hot_key"] == 7
         assert 0.28 <= out["hot_share"] <= 0.32
@@ -89,17 +92,7 @@ def test_estimate_mode_finds_planted_hot_key(spark, tmp_path):
         assert out["verdict"]["binding_constraint"] in ("threshold", "both")
         # Drop the gate to 1 byte: the 30%-mass key is relatively
         # skewed far past factor 5 → split engages.
-        spark.conf.set(
-            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-            "1b",
-        )
-        out2 = t.run_preflight(spark, sf, "lineitem", "l_orderkey")
+        with conf_window(spark, {threshold: "1b"}):
+            out2 = t.run_preflight(spark, sf, "lineitem", "l_orderkey")
         assert out2["verdict"]["would_split"]
         assert out2["verdict"]["binding_constraint"] is None
-    finally:
-        if old is not None:
-            spark.conf.set(
-                "spark.sql.adaptive.skewJoin."
-                "skewedPartitionThresholdInBytes",
-                old,
-            )

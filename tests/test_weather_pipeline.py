@@ -701,3 +701,84 @@ def test_http_dist_reader_resumes_offsets_across_restart(tmp_path):
     # Without offset_state the reader stays fresh-query-correct.
     r3 = WeatherHTTPDistStreamReader({"canned": canned})
     assert r3.initialOffset() == {"batch": 0}
+
+
+def _plan_nodes(node, above=()):
+    """(node name, ancestor names) over a physical plan, descending
+    through the adaptive wrapper and its query stages."""
+    name = node.nodeName()
+    yield name, above
+    if name == "AdaptiveSparkPlan":
+        kids = [node.executedPlan()]
+    elif name.endswith("QueryStage"):
+        kids = [node.plan()]
+    else:
+        cs = node.children()
+        kids = [cs.apply(i) for i in range(cs.size())]
+    for kid in kids:
+        yield from _plan_nodes(kid, above + (name,))
+
+
+def test_tick_batch_is_local_relation_and_merge_never_shuffles_table(
+    spark, tmp_path, monkeypatch
+):
+    """Plan-shape pin for the live tick: the batch make_batch_processor
+    builds is a LocalRelation (known size), so the file-pruned upsert's
+    key-file semi-join and its merge broadcast the batch and never put
+    an exchange above the table scan. A list-built batch is a Python-RDD
+    scan of unknown size and brings back a sort-merge join that
+    shuffles the whole table."""
+    from openweathermapapi_etl_spark.operators import merge
+    from openweathermapapi_etl_spark.streaming.source import make_batch_processor
+
+    monkeypatch.setattr(merge, "_FILE_PRUNE_MIN_BYTES", 0)
+    cities = ["CityA", "CityB", "CityC"]
+    table = VersionedParquetTable(str(tmp_path / "tbl"))
+    history = [
+        dict(DOC, name=c, dt=DOC["dt"] - 300 * i) for c in cities for i in range(20)
+    ]
+    table.upsert(
+        spark, transform_raw(make_raw(spark, history)).distinct(), ["Time", "City_Name"]
+    )
+    # The tick re-sends CityA's latest observation (an existing key, so
+    # a table file is touched and scanned) and two new ones.
+    docs = {c: [dict(DOC, name=c, dt=DOC["dt"] + 300)] for c in cities[1:]}
+    docs["CityA"] = [dict(DOC, name="CityA", main=dict(DOC["main"], temp=30.0))]
+    seen: dict = {}
+    orig_upsert = VersionedParquetTable.upsert
+    orig_key_files = VersionedParquetTable._key_files
+    orig_write = VersionedParquetTable._write
+
+    def upsert(self, spark_, updates, *a, **kw):
+        seen["batch"] = updates
+        return orig_upsert(self, spark_, updates, *a, **kw)
+
+    def key_files(old, updates, keys):
+        seen["detect"] = orig_key_files(old, updates, keys)
+        return seen["detect"]
+
+    def write(self, df, target):
+        seen["merge"] = df
+        return orig_write(self, df, target)
+
+    monkeypatch.setattr(VersionedParquetTable, "upsert", upsert)
+    monkeypatch.setattr(VersionedParquetTable, "_key_files", staticmethod(key_files))
+    monkeypatch.setattr(VersionedParquetTable, "_write", write)
+    make_batch_processor(spark, make_canned_fetcher(docs), table, cities)(None, 0)
+
+    analyzed = seen["batch"]._jdf.queryExecution().analyzed().toString()
+    assert "LocalRelation" in analyzed and "LogicalRDD" not in analyzed
+    for frame in ("detect", "merge"):
+        nodes = list(_plan_nodes(seen[frame]._jdf.queryExecution().executedPlan()))
+        scans = [above for name, above in nodes if name.startswith("Scan parquet")]
+        assert scans, f"{frame}: the table scan is missing"
+        for above in scans:
+            assert not [n for n in above if "Exchange" in n], (frame, above)
+        joins = [name for name, _ in nodes if "Join" in name]
+        assert joins and all(j.startswith("Broadcast") for j in joins), (frame, joins)
+    out = table.read(spark)
+    assert out.count() == len(history) + 2
+    latest_a = out.filter(
+        "City_Name = 'CityA' AND Time = TIMESTAMP '2023-07-22 05:26:40'"
+    ).collect()
+    assert [r.Temperature for r in latest_a] == [30.0]
