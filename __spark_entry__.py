@@ -3,16 +3,20 @@
 The driver's verify runs ``entry(spark)`` as a smoke check, runs
 each ``queries()[name]`` at sf=0.01 and compares it against the
 matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+order-insensitive value-hash).
+
+``queries()`` and ``oracle_sql()`` list names in registration order:
+module by module, as ``openweathermapapi_etl_spark/plans/__init__.py``
+imports them. Consumers look queries up by name; none depends on that
+order.
 
 Contract note — ``rows_only_by_design()``: the three queries absent
 from ``oracle_sql()`` are oracle-less DELIBERATELY, not by omission
 (arrival-order / hash-implementation dependence; each has a pytest
-semantic pin and a driver rows-only green in prior windows). The
-driver renders a no-oracle query as an ``err:no_oracle`` row, which
-reads red in an otherwise green round; ``rows_only_by_design()``
-returns ``{name: reason}`` so any consumer of CORRECTNESS_r{N}.json
-can pass the justification through instead.
+semantic pin). The driver renders a no-oracle query as an
+``err:no_oracle`` row, which reads red in an otherwise green run;
+``rows_only_by_design()`` returns ``{name: reason}`` so any consumer of
+the driver's results can pass the justification through instead.
 
 All real logic lives in ``openweathermapapi_etl_spark`` (see
 SURVEY.md §2 for the operator inventory this exports).

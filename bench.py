@@ -1,13 +1,16 @@
 #!/usr/bin/env python
 """Benchmark: run the headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE JSON
-line: {"metric": ..., "value": total_sec, "unit": "sec",
+line: {"metric": ..., "method": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
 Each query is executed to completion via the ``noop`` sink — a
 ``count()`` action would let Catalyst prune every column and skip the
 actual computation for projection-only queries, under-reporting by
 10x+ — after a session warmup; time measured per query, wall-clock.
+
+``--all`` times every registered query once, in registry order, which
+is registration order (``plans/__init__.py``).
 """
 
 from __future__ import annotations
@@ -22,7 +25,10 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from openweathermapapi_etl_spark.plans import QUERIES  # noqa: E402
 from openweathermapapi_etl_spark.session import get_session  # noqa: E402
 
-#: Headline set: the flagship + one representative per operator family.
+#: Headline set: the flagship plus one representative per operator
+#: family and per distinct execution pattern (shuffle shape, driver
+#: loop, stateful stream, Arrow batch, commit path), so a regression in
+#: any of them shows in the total.
 BENCH_QUERIES = [
     "flagship_q3",
     "b06_select_expr",
@@ -38,7 +44,6 @@ BENCH_QUERIES = [
     "b25_window_frames",
     "b27_top_k",
     "b28_topk_per_group",
-    # Training-data pipeline ops (Tier C) — first-class headline work.
     "c01_exact_dedup",
     "c02_minhash_signatures",
     "c02_minhash_fast",
@@ -46,231 +51,66 @@ BENCH_QUERIES = [
     "c03_cosine_topk_lsh",
     "c03_cosine_topk_ivf",
     "c04_token_stats",
-    # Custom-op hot paths (round-3 verdict task 5): the MERGE operator,
-    # the stateful streaming upsert sink, and the weather ETL e2e are
-    # perf-regression-tracked alongside the relational headline set.
     "m1_keyed_upsert",
     "b44_foreachbatch_upsert",
     "a10_weather_pipeline_e2e",
-    # Multimodal Arrow hot paths (round-4 verdict task 6): the only
-    # operator family previously absent from the headline set — a
-    # mapInPandas Arrow-batch perf regression was invisible.
     "c05_feature_extract",
     "c05_frame_sample",
-    # Round-5 curation additions: the iterative components resolver
-    # (join-per-round + lineage truncation — the only multi-job
-    # operator), the two-stage repetition agg, and the SCD2 merge.
     "c06_dedup_clusters",
     "c04_repetition_stats",
     "m2_scd2_merge",
     "c03_kmeans_iter",
-    # Round-5 additions: CDC snapshot diff (full-outer change
-    # detection) and the distributed total-order rank — both new
-    # operator families whose shuffle patterns deserve regression
-    # tracking.
     "m3_snapshot_diff",
     "b26_global_rank",
-    # Round-6 additions: the exchange-free prefix-sum rewrite's heaviest
-    # user (compaction planning), the date-spine gap fill (generated
-    # spine + keyed fill window), and the PQ encoder (broadcast codebook
-    # + keyed argmin) — each a new shuffle pattern worth tracking.
     "m5_compaction_plan",
     "b24_gap_fill_ffill",
     "c03_pq_encode",
     "c03_ivf_pq_topk",
-    # Round-7 additions (round-6 verdict task 7): the timer-expiry
-    # stateful stream (the only applyInPandasWithState timer path) and
-    # the corpus-sized span-hash shuffle of the round-6 text batch.
     "b53_state_timeout_expiry",
     "c04_repeated_spans",
-    # Round-7 additions: the sparse-retrieval scorer (corpus tf agg +
-    # TakeOrderedAndProject), the full-corpus epoch reshuffle (range
-    # repartition — the biggest deliberate shuffle in the book), the
-    # runtime-bloom-filtered join, SemDeDup's cell-bucketed pair join,
-    # the bigram LM (two corpus explodes + three lookup joins), and the
-    # SQ8 stats+encode passes — each a new shuffle pattern to track.
     "c04_bm25_topk",
     "c07_epoch_shuffle",
     "b10_bloom_runtime_filter",
     "c02_semdedup",
     "c04_bigram_interp_score",
     "c03_sq8_encode",
-    # Round-7c additions: the O(log n) star-CC (per-round edge rewrite —
-    # the other iterative-graph shuffle pattern), the corpus-scoring +
-    # tertile-broadcast perplexity buckets, and the partition-pruned
-    # targeted delete (broadcast semi-join + hard-link rewrite).
     "c06_cc_alternating_star",
     "c04_ppl_buckets",
     "m6_targeted_delete",
-    # Round-7d additions: the exact prefix-filter set-similarity join
-    # (rarest-shingle candidate join + rank-array verify — the only
-    # operator whose hot path carries sorted int arrays through a
-    # join) and the wedge-enumeration neighbor similarity (shared-
-    # neighbor self-join — degree-bounded bucket expansion).
     "c02_setsim_exact",
     "c06_jaccard_neighbors",
-    # Round-7e additions: the bucketed-checksum reconciliation (two
-    # metadata-sized partial aggs + corruption-bounded drill-down),
-    # the mapInPandas Gram reduction + broadcast-matmul PCA (the only
-    # numpy-BLAS hot path), the broadcast-vocab PMI pair expansion,
-    # and the RANGE-framed cumulative-weight median — each a new
-    # execution pattern worth regression-tracking.
     "m10_reconcile_checksum",
     "c03_pca_project",
     "c04_pmi_lift",
     "b16_weighted_median",
-    # Round-7g additions: the delta-vs-corpus incremental band join
-    # (the per-ingest dedup shape), the broadcast bit-set cross-corpus
-    # prefilter, and the persisted-IVF serve path (index IO + reload
-    # query — regression here means the stored-index lifecycle broke).
     "c02_incremental_neardup",
     "c02_cross_corpus_overlap",
     "c03_ivf_persist",
-    # Round-7h additions: the winnowing window-min + fingerprint join
-    # (the localizing dedup pattern), the BQ Hamming+rerank funnel
-    # (two-tier vector search), and CDC aggregate maintenance
-    # (retraction-fold + keyed state merge).
     "c02_winnow_matches",
     "c03_bq_rerank_funnel",
     "m15_cdc_agg_maintenance",
-    # Round-7i additions: the prefix-dim MRL funnel (narrow coarse scan
-    # + id-join rerank — the float sibling of the BQ funnel) and DSIR
-    # importance scoring (double corpus explode + 64-row broadcast LM
-    # join — the importance-resampling selection pattern).
     "c03_mrl_rerank_funnel",
     "c04_dsir_importance",
-    # Round-7i additions (cont.): the boilerplate strip's
-    # explode→count→join-back→ordered-reassembly pipeline — the only
-    # query that rebuilds documents from sorted position structs.
     "c04_boilerplate_strip",
-    # Round-7i additions (cont.): graph-expansion ANN — frontier hop
-    # joins over the k-NN edge list, the only graph-index search path.
     "c03_graph_expand_topk",
-    # Round-7j additions: the centroid-drift audit (broadcast
-    # assignment + cells-sized self-join — the index-staleness pass)
-    # and the JL projection (the widest row-local codegen expression
-    # in the book: 16 inline 64-term folds, zero shuffle).
     "c03_centroid_drift",
     "c03_jl_projection",
-    # Round-8 additions: the first-copy chunk dedup (global min-by over
-    # chunk text + winner join-back — the map-side-combining sibling of
-    # the boilerplate strip's count+filter shape).
     "c04_first_copy_dedup",
-    # Round-8 additions (cont.): the RVQ encoder — two chained
-    # broadcast-argmin passes where the second stage's codebook is
-    # DERIVED from the first stage's output (the only two-level
-    # quantizer dependency chain in the book).
     "c03_rvq_encode",
-    # Round-8 additions (cont.): CDC chunking — the widest row-local
-    # char-array expression (per-byte polynomial boundary scan) feeding
-    # one chunk-keyed frequency shuffle.
     "c05_cdc_chunking",
-    # Round-8 additions (cont.): the deepest join tree in the book —
-    # four chained broadcast-hash joins over the fact table in one
-    # codegen pass (the star-schema reduction every BI query makes).
     "flagship_q5",
-    # Round-9 addition (round-8 judge Next #7): Q18's derived-build-
-    # side pattern — the HAVING-filtered fact aggregate drives the
-    # join-back, AQE sizes it at runtime; regression here means the
-    # two-phase plan stopped treating the aggregate as the small side.
     "flagship_q18",
-    # Round-10 additions (round-9 judge Next #6): the heavy iterative/
-    # graph ops previously never benched — peel-loop k-core, the
-    # delta-rebucketed incremental CC maintenance path, the k-center
-    # farthest-first selector (driver-loop + broadcast-argmax rounds),
-    # and semantic decontamination (cell-bucketed eval-vs-corpus join).
-    # r10 is their baseline; regressions there could previously hide.
     "c06_kcore",
     "c06_incremental_cc",
     "c03_kcenter_select",
     "c09_decontaminate_semantic",
 ]
 
-#: The previous round's headline set (BENCH_r09.json), so totals can be
-#: compared like-for-like round-over-round: the headline total grows
-#: whenever queries are ADDED, which otherwise reads as a regression
-#: until decomposed (round-4 verdict task 7).
-PREV_ROUND_QUERIES = [
-    "flagship_q3",
-    "b06_select_expr",
-    "b07_filter_predicates",
-    "b10_inner_join",
-    "b11_left_join",
-    "b14_range_join",
-    "b15_asof_join",
-    "b16_groupby_agg",
-    "b17_count_distinct",
-    "b20_rollup",
-    "b23_ranking_windows",
-    "b25_window_frames",
-    "b27_top_k",
-    "b28_topk_per_group",
-    "c01_exact_dedup",
-    "c02_minhash_signatures",
-    "c02_minhash_fast",
-    "c02_lsh_candidates",
-    "c03_cosine_topk_lsh",
-    "c03_cosine_topk_ivf",
-    "c04_token_stats",
-    "m1_keyed_upsert",
-    "b44_foreachbatch_upsert",
-    "a10_weather_pipeline_e2e",
-    "c05_feature_extract",
-    "c05_frame_sample",
-    "c06_dedup_clusters",
-    "c04_repetition_stats",
-    "m2_scd2_merge",
-    "c03_kmeans_iter",
-    "m3_snapshot_diff",
-    "b26_global_rank",
-    "m5_compaction_plan",
-    "b24_gap_fill_ffill",
-    "c03_pq_encode",
-    "c03_ivf_pq_topk",
-    "b53_state_timeout_expiry",
-    "c04_repeated_spans",
-    "c04_bm25_topk",
-    "c07_epoch_shuffle",
-    "b10_bloom_runtime_filter",
-    "c02_semdedup",
-    "c04_bigram_interp_score",
-    "c03_sq8_encode",
-    "c06_cc_alternating_star",
-    "c04_ppl_buckets",
-    "m6_targeted_delete",
-    "c02_setsim_exact",
-    "c06_jaccard_neighbors",
-    "m10_reconcile_checksum",
-    "c03_pca_project",
-    "c04_pmi_lift",
-    "b16_weighted_median",
-    "c02_incremental_neardup",
-    "c02_cross_corpus_overlap",
-    "c03_ivf_persist",
-    "c02_winnow_matches",
-    "c03_bq_rerank_funnel",
-    "m15_cdc_agg_maintenance",
-    "c03_mrl_rerank_funnel",
-    "c04_dsir_importance",
-    "c04_boilerplate_strip",
-    "c03_graph_expand_topk",
-    "c03_centroid_drift",
-    "c03_jl_projection",
-    "c04_first_copy_dedup",
-    "c03_rvq_encode",
-    "c05_cdc_chunking",
-    "flagship_q5",
-    "flagship_q18",
-]
-
 
 def main() -> None:
-    # --all (r10 verdict Next #1): time EVERY registered query, not
-    # just the 74-query headline set — the standing per-query wall-time
-    # baseline (committed once per round as BENCH_FULL_r{N}.json) that
-    # makes a time regression in the other ~280 queries visible without
-    # waiting for their driver-window rotation. Same noop-sink
-    # discipline; the headline mode stays the round-over-round gauge.
+    # --all: time EVERY registered query, not just the headline set,
+    # so a wall-time regression anywhere in the book is visible
+    # (compare two sweeps with tools/bench_diff.py).
     run_all = "--all" in sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -285,29 +125,20 @@ def main() -> None:
 
     names = list(QUERIES) if run_all else BENCH_QUERIES
     if run_all:
-        # HEAD warmup (r13): --all runs in registration order, and the
-        # driver-window rotation reorders that head every round — so
-        # whichever queries sit first absorb the session's remaining
-        # JIT/codegen ramp and read ~2-3x hot. The r12→r13 diff showed
-        # exactly the rotated-to-front queries as spurious regressions
-        # and the rotated-away ones as spurious improvements. One
-        # unmeasured pass over the first few names de-positions the
-        # figures; method field records the change. 16 covers the
-        # measured ramp (K=8 left positions 8-10 flagged — including
-        # the order's first JDBC query, which pays the one-time Derby
-        # engine boot for the whole session).
+        # Head warmup: whichever queries run first absorb the session's
+        # remaining JIT/codegen ramp and read ~2-3x hot, so one
+        # unmeasured pass over the first names keeps their figures
+        # comparable with the rest. 16 covers the measured ramp (8 left
+        # positions 8-10 hot, including the first JDBC query, which
+        # pays the one-time Derby boot for the whole session).
         for name in names[:16]:
             force(QUERIES[name](spark, sf_dir))
-    # Headline mode reports MIN-OF-3 per query (r11 verdict Next #3,
-    # raised from 2 in r12): the single-shot numbers carried a uniform
-    # ~1.15x session/cache noise band, and the host shows ~3% average
-    # hypervisor CPU STEAL with multi-second bursts (measured r12,
-    # SCALE.md host-drift note) — a burst spanning both runs of a
-    # min-of-2 still pollutes that query's figure, while three runs
-    # make a single burst discardable. The first (cold) run pays file
-    # listing + codegen + JIT; the min is the comparable figure. --all
-    # stays single-shot per sweep (the full book is 357 queries; its
-    # committed BENCH_FULL baseline is min-across-3-sweeps by method).
+    # Headline mode reports MIN-OF-3 per query: single-shot numbers
+    # carry a ~1.15x session/cache noise band, and the host shows
+    # multi-second CPU-steal bursts (SCALE.md host-drift note); with
+    # three runs a single burst is discardable. The first (cold) run
+    # pays file listing + codegen + JIT; the min is the comparable
+    # figure. --all stays single-shot per sweep.
     repeats = 1 if run_all else 3
     timings: dict[str, float] = {}
     for name in names:
@@ -332,9 +163,6 @@ def main() -> None:
                     else f"min_of_{repeats}"
                 ),
                 "value": round(sum(timings.values()), 3),
-                "value_prev_set": round(
-                    sum(timings.get(n, 0.0) for n in PREV_ROUND_QUERIES), 3
-                ),
                 "unit": "sec",
                 "queries": timings,
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,

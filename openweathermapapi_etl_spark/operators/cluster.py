@@ -194,11 +194,13 @@ def connected_components_star(
     truncated per round (localCheckpoint — swap for reliable
     checkpoint() on a cluster with preemptible executors).
 
-    Fixpoint detection: a 64-bit edge-set checksum (count +
-    sum(xxhash64)) each round, CONFIRMED by an exact two-sided
-    ``exceptAll`` comparison before exiting — the checksum alone has a
-    ~2⁻⁶⁴ collision risk, the confirm makes termination exact while
-    paying the extra shuffles only on the candidate final round.
+    Fixpoint detection: an edge-set signature (exact count +
+    sum(xxhash64)) each round, CONFIRMED by one ``left_anti`` join
+    before exiting. Equal signatures prove both edge sets have the same
+    size, and both are DISTINCT, so an empty ``e ∖ stepped`` proves
+    them equal. The hash alone has a ~2⁻⁶⁴ collision risk; the confirm
+    makes termination exact while paying its shuffle only on the
+    candidate final round.
     """
     e = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))

@@ -210,7 +210,6 @@ def setsim_join(
             * (p + q)
             >= (F.col("a._sz") + F.col("b._sz")) * p
         )
-    if pair_dedup == "positional":
         cand = (
             a.join(b, cond)
             .filter(

@@ -1,9 +1,9 @@
 """Unit pins for the measurement tooling (tools/bench_diff.py,
-tools/bench_isolated.py) — the round-12 verdict showed the
-verification layer itself can harbor false-greens (check_parity's
-typo'd-name "ALL OK"), so the host-drift normalization added in
-round 13 gets the same treatment: pure-python tests that fail on a
-broken normalizer, no Spark session needed.
+tools/bench_isolated.py, tools/changed_queries.py) — the round-12
+verdict showed the verification layer itself can harbor false-greens
+(check_parity's typo'd-name "ALL OK"), so the host-drift normalization
+added in round 13 gets the same treatment: pure-python tests that fail
+on a broken normalizer, no Spark session needed.
 """
 
 from __future__ import annotations
@@ -59,40 +59,84 @@ def test_diff_normalizes_by_host_factor():
     assert not norm["improved"]
 
 
-def test_control_refs_end_to_end_r11_vs_r12():
-    """The round-13 order's acceptance check, pinned: the committed
-    BENCH_FULL_r11 vs _r12 sweeps, control-derived from the round-12
-    commit range, must reproduce the manual adjudication — a host
-    factor near the manually-derived 1.21 and (almost) no flags.
-    m5_compaction_plan is the one residual the tool still flags at
-    1.5x; its adjudication lives in SCALE.md (round-13 section)."""
-    r11 = os.path.join(REPO, "BENCH_FULL_r11.json")
-    r12 = os.path.join(REPO, "BENCH_FULL_r12.json")
-    if not (os.path.exists(r11) and os.path.exists(r12)):
-        pytest.skip("standing baselines not present")
+def test_control_refs_end_to_end_synthetic(tmp_path):
+    """``--control-refs`` end to end on two synthetic BENCH_FULL-shaped
+    sweeps over the registered query names: every query 1.2x slower
+    (host drift) and one query outside the control set a further 3x
+    slower (a real regression). The tool must derive the 1.2 host factor
+    from the control set and flag exactly the planted query."""
+    import re
+
+    from openweathermapapi_etl_spark.plans import QUERIES
+
     # On a shallow clone / rewritten history the pinned commits may
-    # not exist; control_set's check=True git diff would then raise
-    # and json.loads('') ERRORs the test. Skip, mirroring the
-    # missing-baseline path (r14 advisor catch).
+    # not exist; control_set's check=True git diff would then raise.
     for ref in ("f7d7bf2", "2dae0ea"):
         ok = subprocess.run(
             ["git", "cat-file", "-e", ref], cwd=REPO, capture_output=True
         )
         if ok.returncode != 0:
             pytest.skip(f"pinned commit {ref} absent (shallow clone?)")
+    # plans/curation.py changed in f7d7bf2..2dae0ea, so none of its
+    # queries can be control.
+    planted = next(
+        n for n, fn in QUERIES.items() if fn.__module__.endswith(".curation")
+    )
+    old = {n: 0.5 + (i % 10) * 0.1 for i, n in enumerate(QUERIES)}
+    new = {n: s * 1.2 for n, s in old.items()}
+    new[planted] *= 3.0
+    paths = []
+    for tag, qs in (("old", old), ("new", new)):
+        path = tmp_path / f"BENCH_FULL_{tag}.json"
+        path.write_text(json.dumps({
+            "metric": "full_book_runtime", "method": "synthetic",
+            "queries": {n: round(v, 3) for n, v in qs.items()},
+        }))
+        paths.append(str(path))
     out = subprocess.run(
         [sys.executable, os.path.join(REPO, "tools", "bench_diff.py"),
-         r11, r12, "--control-refs", "f7d7bf2", "2dae0ea", "--json"],
+         *paths, "--control-refs", "f7d7bf2", "2dae0ea", "--json"],
         capture_output=True, text=True, cwd=REPO,
     )
-    assert out.returncode in (0, 1), out.stderr[-1500:]
+    assert out.returncode == 1, out.stderr[-1500:]
     d = json.loads(out.stdout)
-    assert 1.1 < d["host_factor"] < 1.3, d["host_factor"]
-    flagged = {r["query"] for r in d["regressed"]}
-    assert flagged <= {"m5_compaction_plan"}, flagged
-    # The derivation must be non-degenerate (the hub rule): a control
-    # set in the hundreds, not zero.
-    assert "control set:" in out.stderr and d["shared"] >= 300
+    assert d["host_factor"] == pytest.approx(1.2, abs=1e-3)
+    assert [r["query"] for r in d["regressed"]] == [planted]
+    assert d["regressed"][0]["ratio"] == pytest.approx(3.0, abs=0.01)
+    assert not d["improved"] and not d["missing"]
+    # The hub rule keeps the control set non-degenerate: the range
+    # edits plans/registry.py, whose closure reaches every query, so
+    # without the rule no query would be control.
+    assert "ignoring hub module(s)" in out.stderr and "'registry'" in out.stderr
+    n_ctl = int(re.search(r"control set: (\d+) untouched", out.stderr)[1])
+    assert len(QUERIES) // 4 <= n_ctl < len(QUERIES), n_ctl
+
+
+def test_affected_modules_follows_reverse_imports():
+    """tools/changed_queries.py's closure on the package's real import
+    graph: a change to operators/merge.py marks its importers, and a
+    module outside that closure stays unmarked."""
+    import changed_queries as cq
+
+    known = cq.package_modules()
+    pkg = cq.PKG
+    merge = f"{pkg}.operators.merge"
+    cause = cq.affected_modules({merge}, known)
+    assert cause[merge] == merge
+    for mod in ("plans.merge_q", "streaming.source"):
+        assert cause[f"{pkg}.{mod}"] == merge, mod
+    # Transitive: plans/weather_q.py reaches merge.py only through
+    # pipeline/weather.py.
+    weather_q = f"{pkg}.plans.weather_q"
+    assert merge not in cq.imports_of(known[weather_q], weather_q, set(known))
+    assert cause[weather_q] == merge
+    # operators/setsim.py imports only rank and text, neither of which
+    # reaches merge.py.
+    setsim = f"{pkg}.operators.setsim"
+    deps = cq.imports_of(known[setsim], setsim, set(known))
+    assert deps == {f"{pkg}.operators.rank", f"{pkg}.operators.text"}
+    assert not deps & set(cause)
+    assert setsim not in cause
 
 
 def test_bench_isolated_failures_isolated_from_timings():

@@ -107,74 +107,29 @@ def test_register_requires_oracle_or_documented_reason():
     assert "zz_test_both" not in QUERIES
 
 
-def test_driver_window_rotates_to_stalest_checked():
-    """The correctness driver records rows for the first 50 registered
-    names only. The window ROTATES each round; the head is DERIVED
-    (tools/changed_queries.py: {never driver-checked} ∪ {git diff →
-    module → reverse transitive import closure → registered queries}),
-    with never-checked names at the very front (round-6 verdict: the
-    old rule stranded b23_distribution_windows outside every window).
-    Invariants: the head leads in order, the overflow ranks
-    immediately after the window (stalest for the next rotation), and
-    the previous round's window rotates to the back."""
-    from openweathermapapi_etl_spark.plans import _HEAD, _PREV_WINDOW
+def test_registry_order_is_registration_order():
+    """``QUERIES`` keeps registration order: each plans module's names
+    form one contiguous group, and the groups follow the order in which
+    ``plans/__init__.py`` imports the modules. Any import-time reorder
+    of the registry breaks this."""
+    import ast
 
-    names = list(QUERIES)
-    assert names[: len(_HEAD)] == _HEAD, "affected queries must lead"
-    # The previous round's window rotates to the back (minus names
-    # promoted into the head).
-    tail = [n for n in _PREV_WINDOW if n not in set(_HEAD)]
-    assert names[-len(tail):] == tail, "previous window must rotate to the back"
-    # Everything in between is the stale remainder; nothing lost.
-    middle = names[len(_HEAD):-len(tail)]
-    assert set(middle) == set(QUERIES) - set(_HEAD) - set(tail)
-    # Every name the 50-slot window sheds this round is either covered
-    # by round 6's window (checked last round) or ranked ahead of all
-    # round-6-checked names for the next rotation — no query is both
-    # dropped from the window AND deprioritized behind fresher names.
-    window = set(names[:50])
-    for n in set(QUERIES) - window - set(_PREV_WINDOW):
-        assert names.index(n) < len(names) - len(tail), n
+    import openweathermapapi_etl_spark.plans as plans
 
-
-def test_driver_window_covers_every_never_checked_query():
-    """Round-6 verdict Wrong #2, made structural: the 50-slot driver
-    window must be OPTIMALLY FILLED — no slot may hold an
-    already-green, unchanged query while a never-driver-checked one
-    (or a pinned recheck) waits outside. When candidates outnumber
-    slots (registrations outpace the window), stranding is allowed
-    only as pure overflow, and the overflow must queue IMMEDIATELY
-    after the window so it is head-of-line next round — bounded at
-    one round, never indefinite."""
-    import sys
-
-    sys.path.insert(
-        0,
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"
-        ),
-    )
-    from changed_queries import never_driver_checked
-
-    from openweathermapapi_etl_spark.plans import _RECHECK
-
-    names = list(QUERIES)
-    must_fill = set(never_driver_checked(names)) | set(_RECHECK)
-    window = names[:50]
-    if len(must_fill) <= 50:
-        outside = sorted(must_fill - set(window))
-        assert not outside, (
-            f"never-driver-checked queries outside a non-full window: {outside}"
-        )
-    else:
-        # Overflow round: every slot goes to a candidate...
-        wasted = [n for n in window if n not in must_fill]
-        assert not wasted, f"window slots wasted on already-checked: {wasted}"
-        # ...and the stranded candidates sit directly after the window
-        # (positions 50..50+overflow-1), head-of-line for next round.
-        n_over = len(must_fill) - 50
-        after = names[50 : 50 + n_over]
-        assert set(after) <= must_fill and set(window) | set(after) == must_fill
+    with open(plans.__file__) as fh:
+        tree = ast.parse(fh.read())
+    imported = [
+        f"{plans.__name__}.{a.name}"
+        for node in tree.body
+        if isinstance(node, ast.ImportFrom) and node.level == 1 and not node.module
+        for a in node.names
+    ]
+    groups: list[str] = []
+    for fn in QUERIES.values():
+        if not groups or groups[-1] != fn.__module__:
+            groups.append(fn.__module__)
+    assert groups == imported
+    assert list(ORACLES) == [n for n in QUERIES if n in ORACLES]
 
 
 def test_cached_agg_plan_reads_from_cache(spark):

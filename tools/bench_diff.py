@@ -3,13 +3,15 @@
 
 PLANS_FULL.md (pinned by tests/test_plan_shapes.py) gates plan SHAPE
 drift book-wide; this closes the remaining observability gap the
-round-10 verdict named: wall-TIME drift. BENCH_FULL_r{N}.json is the
-standing per-query baseline; run this against the next full sweep (or
-any headline BENCH_r{N}.json pair) to get the regression list the
-bench JSON's flat format can't show by eye across 357 entries.
+round-10 verdict named: wall-TIME drift. BENCH_FULL_r15.json (a
+``bench.py --all`` sweep) is the standing per-query baseline; run this
+against the next full sweep (or any pair of headline ``bench.py``
+outputs, e.g. BENCH_r15.json) to get the regression list the bench
+JSON's flat format can't show by eye across 362 entries.
 
 Usage:
-    python tools/bench_diff.py OLD.json NEW.json [--threshold 1.5]
+    python tools/bench_diff.py BENCH_FULL_r15.json NEW.json
+                               [--threshold 1.5]
                                [--min-sec 0.3] [--json]
                                [--control-refs BASE [HEAD]]
                                [--control q1,q2,...]
@@ -27,9 +29,9 @@ rounds (r11→r12 measured a uniform 1.21x on untouched code), so a raw
 ratio conflates host speed with code cost. With --control-refs the
 tool derives the CONTROL SET mechanically — the shared queries whose
 defining module is NOT in the reverse transitive import closure of
-``git diff BASE..HEAD`` (the same closure tools/changed_queries.py
-uses for the correctness window) — computes the median old→new ratio
-over that set (the host factor), divides every query's ratio by it,
+``git diff BASE..HEAD`` (the closure tools/changed_queries.py
+prints) — computes the median old→new ratio over that set (the host
+factor), divides every query's ratio by it,
 and flags only the normalized outliers: code-attributable drift, not
 weather. --control takes an explicit comma-list instead when the refs
 aren't available (e.g. comparing two sweeps of the same commit, where
@@ -82,8 +84,8 @@ def control_set(old: dict[str, float], new: dict[str, float],
     ``git diff base..head`` (transitively, over the package import
     graph) — the mechanically-derived control set.
 
-    One deliberate divergence from the CORRECTNESS closure
-    (tools/changed_queries.py): HUB modules — whose reverse closure
+    One deliberate divergence from tools/changed_queries.py's
+    closure: HUB modules — whose reverse closure
     reaches at least half the registered queries (plans/registry.py,
     plans/__init__.py, session.py are the perennial ones) — are
     dropped from the changed set before the closure. For correctness

@@ -1,26 +1,18 @@
 #!/usr/bin/env python
-"""Derive the correctness-window head for a round: every registered
-query TRANSITIVELY affected by the round's code changes.
+"""List every registered query TRANSITIVELY affected by a code change.
 
-Round-4 verdict (Wrong #3): a hand-curated head listed only the queries
-whose own module was edited, missing e.g. a streaming/jobs.py refactor
-that every B38-B44 query transits. This tool derives the head
-mechanically: ``git diff --name-only BASE..HEAD`` → changed package
-modules → reverse transitive closure over the intra-package import
-graph (a module is affected if it changed or imports an affected
-module) → registered queries whose defining module is affected.
-
-Round-6 verdict (Wrong #2) added a second mechanical input: queries
-that have NEVER appeared in any ``CORRECTNESS_r*.json`` window (the
-rotation rule only backfills from the previous round's window, so a
-query registered into the overflow could stay unchecked forever —
-``b23_distribution_windows`` was the counterexample). The head is now
-{never driver-checked} ∪ {changed this round}, never-checked first.
+``git diff --name-only BASE..HEAD`` → changed package modules →
+reverse transitive closure over the intra-package import graph (a
+module is affected if it changed or imports an affected module) →
+registered queries whose defining module is affected. A hand-written
+list misses, e.g., a streaming/jobs.py refactor that every B38-B44
+query transits; the closure does not.
 
 Usage: python tools/changed_queries.py <base_ref> [head_ref]
-Prints a paste-ready ``_R{N}_HEAD`` body, one query name per line with
-the module chain that pulled it in. The loud unknown-name guard in
-plans/__init__.py stays the runtime backstop.
+Prints one query name per line: direct changes (the defining module
+itself changed) first, then transitive ones, each with the module
+chain that pulled it in. ``tools/bench_diff.py --control-refs`` reuses
+the same closure to pick its untouched control queries.
 """
 
 from __future__ import annotations
@@ -96,19 +88,6 @@ def affected_modules(changed: set[str], known: dict[str, str]) -> dict[str, str]
     return cause
 
 
-def never_driver_checked(queries) -> list[str]:
-    """Registered queries absent from EVERY committed driver window
-    (CORRECTNESS_r*.json) — the hard signal has never seen them."""
-    import glob
-    import json
-
-    checked: set[str] = set()
-    for f in glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json")):
-        with open(f) as fh:
-            checked |= set(json.load(fh))
-    return [n for n in queries if n not in checked]
-
-
 def main() -> None:
     if len(sys.argv) < 2:
         sys.exit("usage: changed_queries.py <base_ref> [head_ref]")
@@ -123,39 +102,23 @@ def main() -> None:
 
     from openweathermapapi_etl_spark.plans import QUERIES
 
-    never = never_driver_checked(QUERIES)
     cause = affected_modules(changed, known) if changed else {}
-
-    # Never-driver-checked first (a query the hard signal has never
-    # seen outranks one that changed but was previously green), then
-    # direct (the defining module itself changed), then transitive
-    # (the module imports a changed one): the driver window truncates
-    # at 50 names, so when the closure overflows it, the truncation
-    # must shed the lower-risk transitive tail, never a direct change.
     direct, transitive = [], []
     for name, fn in QUERIES.items():
-        if name in never:
-            continue
         mod = fn.__module__
         if mod not in cause:
             continue
         why = cause[mod]
         short = mod.rsplit(".", 1)[-1]
         if why == mod:
-            direct.append(f'    "{name}",  # {short}')
+            direct.append(f"{name}  # {short}")
         else:
-            transitive.append(f'    "{name}",  # {short} -> {why.rsplit(".", 1)[-1]}')
-    for n in never:
-        print(f'    "{n}",  # NEVER driver-checked — window-head priority')
+            transitive.append(f"{name}  # {short} -> {why.rsplit('.', 1)[-1]}")
     for line in direct + transitive:
         print(line)
-    total = len(never) + len(direct) + len(transitive)
     print(
-        f"# {total} head names ({len(never)} never-checked, {len(direct)} "
-        f"direct, {len(transitive)} transitive); window truncates at 50 "
-        "— overflow names stay "
-        "stalest-first for the next rotation and are pytest-verified "
-        "every run regardless.",
+        f"# {len(direct) + len(transitive)} affected queries "
+        f"({len(direct)} direct, {len(transitive)} transitive)",
         file=sys.stderr,
     )
 
