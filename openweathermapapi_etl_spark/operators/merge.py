@@ -40,10 +40,10 @@ local collection (``createDataFrame`` of a ``pyarrow.Table`` or pandas
 frame, a ``LocalRelation``) has a known size, while one built from a
 Python list is an RDD scan of unknown size and gets a sort-merge join
 that shuffles the whole table (measured: 70 MB of shuffle per 12-row
-tick into a 2.5M-row table). ``broadcast_updates=True`` forces the
-broadcast. :meth:`VersionedParquetTable.upsert` rewrites only what the
-batch touches: the touched hive partitions of a partitioned table, or
-the touched data files of a large unpartitioned one.
+tick into a 2.5M-row table). :meth:`VersionedParquetTable.upsert`
+rewrites only what the batch touches: the touched hive partitions of a
+partitioned table, or the touched data files of a large unpartitioned
+one.
 """
 
 from __future__ import annotations
@@ -170,7 +170,6 @@ def keyed_upsert(
     updates: DataFrame,
     keys: list[str],
     order_col: str | None = None,
-    broadcast_updates: bool = False,
     allow_new_columns: bool = False,
     updates_key_unique: bool = False,
 ) -> DataFrame:
@@ -197,6 +196,7 @@ def keyed_upsert(
         if updates_key_unique
         else dedup_last_write_wins(updates, keys, order_col)
     )
+    new_cols = []
     if allow_new_columns:
         # Additive schema evolution (Delta/Iceberg mergeSchema
         # semantics): updates may CARRY new columns — survivors
@@ -210,26 +210,15 @@ def keyed_upsert(
                 "evolution is additive-only"
             )
         new_cols = [c for c in deduped.columns if c not in old.columns]
-        deduped = deduped.select(*old.columns, *new_cols)
-        anti_keys = deduped.select(
-            *[F.col(k).alias(f"__u_{k}") for k in keys]
-        )
-        anti_right = F.broadcast(anti_keys) if broadcast_updates else anti_keys
-        cond = _all_eq_nullsafe(
-            (F.col(k), F.col(f"__u_{k}")) for k in keys
-        )
-        survivors = old.join(anti_right, on=cond, how="left_anti")
-        return deduped.unionByName(survivors, allowMissingColumns=True)
-    deduped = deduped.select(*old.columns)  # align column order
+    deduped = deduped.select(*old.columns, *new_cols)  # align column order
     # Rename the anti side's keys so the null-safe condition is
     # unambiguous even when ``updates`` shares lineage with ``old``.
     anti_keys = deduped.select(
         *[F.col(k).alias(f"__u_{k}") for k in keys]
     )
-    anti_right = F.broadcast(anti_keys) if broadcast_updates else anti_keys
     cond = _all_eq_nullsafe((F.col(k), F.col(f"__u_{k}")) for k in keys)
-    survivors = old.join(anti_right, on=cond, how="left_anti")
-    return deduped.unionByName(survivors)
+    survivors = old.join(anti_keys, on=cond, how="left_anti")
+    return deduped.unionByName(survivors, allowMissingColumns=allow_new_columns)
 
 
 class VersionedParquetTable:
@@ -1037,10 +1026,15 @@ class VersionedParquetTable:
         the data alive either way)."""
         pcol = self.partition_by
         old_dir = self._version_dir(self.current_version())
+        old = self.read(spark)
+        widened = self._overwrite_if_widened(
+            old, updates, keys, order_col, updates_key_unique
+        )
+        if widened is not None:
+            return widened
         # Touched partition values: bounded by design (a micro-batch
         # touches few partitions), so driver-side collect is safe.
         touched = [r[0] for r in updates.select(pcol).distinct().collect()]
-        old = self.read(spark)
         merged = keyed_upsert(
             old.filter(_null_safe_isin(F.col(pcol), touched)),
             updates,
@@ -1067,15 +1061,11 @@ class VersionedParquetTable:
         Caller guarantees data files and no tombstone side file."""
         old_dir = self._version_dir(self.current_version())
         old = spark.read.parquet(old_dir)
-        whole = keyed_upsert(
-            old, updates, keys, order_col, updates_key_unique=updates_key_unique
+        widened = self._overwrite_if_widened(
+            old, updates, keys, order_col, updates_key_unique
         )
-        if [f.dataType.simpleString() for f in whole.schema] != [
-            f.dataType.simpleString() for f in old.schema
-        ]:
-            # A batch that widens a column type would leave files of two
-            # types in one version: rewrite the whole table instead.
-            return self.overwrite(whole)
+        if widened is not None:
+            return widened
         touched = {r[0] for r in self._key_files(old, updates, keys).collect()}
         # No file touched (every key is new): the merge is the batch
         # alone. ``limit(0)`` keeps the empty side a plan over the table,
@@ -1097,6 +1087,30 @@ class VersionedParquetTable:
         return self._write_linked(
             merged, old_dir, lambda e: e in files and e not in touched
         )
+
+    def _overwrite_if_widened(
+        self,
+        old: DataFrame,
+        updates: DataFrame,
+        keys: list[str],
+        order_col: str | None,
+        updates_key_unique: bool,
+    ) -> int | None:
+        """The type guard of both pruned upserts. They link the current
+        version's untouched partitions or files into the new one, so a
+        batch that widens a column type would leave files of two types
+        in one version, which the parquet reader rejects. When the
+        whole-table merge changes a column type of ``old``, commit it as
+        a full rewrite and return the new version; otherwise return None
+        (planning only, no Spark job)."""
+        whole = keyed_upsert(
+            old, updates, keys, order_col, updates_key_unique=updates_key_unique
+        )
+        if [f.dataType.simpleString() for f in whole.schema] == [
+            f.dataType.simpleString() for f in old.schema
+        ]:
+            return None
+        return self.overwrite(whole)
 
     @staticmethod
     def _key_files(old: DataFrame, updates: DataFrame, keys: list[str]) -> DataFrame:

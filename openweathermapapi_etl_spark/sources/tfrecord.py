@@ -24,10 +24,13 @@ masked CRC-32C per length and payload; the structure — and the
 fail-loudly contract — is the same).
 
 Scale notes: parallelism = container files (the writer shards by
-partition, so file count tracks write parallelism); each record is
-decoded once, streamed as a tuple, never accumulated. A corrupt record
-fails its task (and so the query) rather than dropping rows — opt-in
-permissive handling belongs in the caller, not silently in the reader.
+partition, so file count tracks write parallelism). Sequential and
+random-access reads share one frame parser that reads one record at a
+time from a buffered file handle, so a reader holds at most one record
+in memory whatever the shard size; each record is decoded once and
+streamed as a tuple, never accumulated. A corrupt record fails its task
+(and so the query) rather than dropping rows — opt-in permissive
+handling belongs in the caller, not silently in the reader.
 """
 
 from __future__ import annotations
@@ -71,6 +74,16 @@ def xor_fold(payload: bytes) -> int:
     return x
 
 
+def _frame(doc_id: int, text: str) -> bytes:
+    """One record in the container format (module docstring)."""
+    payload = json.dumps({"doc_id": int(doc_id), "text": text}).encode("utf-8")
+    return (
+        struct.pack("<I", len(payload))
+        + payload
+        + struct.pack("<I", xor_fold(payload))
+    )
+
+
 def write_records(path: str, rows: Iterator[tuple[int, str]]) -> int:
     """Append length-prefixed checksummed records to ``path``;
     returns the record count. Executor-side helper for mapInPandas
@@ -78,99 +91,50 @@ def write_records(path: str, rows: Iterator[tuple[int, str]]) -> int:
     n = 0
     with open(path, "ab") as fh:
         for doc_id, text in rows:
-            payload = json.dumps(
-                {"doc_id": int(doc_id), "text": text}
-            ).encode("utf-8")
-            fh.write(struct.pack("<I", len(payload)))
-            fh.write(payload)
-            fh.write(struct.pack("<I", xor_fold(payload)))
+            fh.write(_frame(doc_id, text))
             n += 1
     return n
 
 
-def _buffer_min_bytes() -> int:
-    """Shards at least this large read through the whole-buffer framing
-    path (ONE ``read()`` + ``unpack_from`` offset walk — no per-record
-    read-syscall pair); smaller shards keep the scalar loop, which
-    measured FASTER at fixture scale in r14 (the buffered rewrite was
-    tried ungated and rejected at 1.3-1.9x worse — per-record overhead
-    only amortizes on big shards, and that attempt's numpy import tax
-    per fresh DataSource worker is avoided here entirely: the buffered
-    path is plain ``struct.unpack_from``). Read per call (cost: one
-    getenv per FILE) so tests and deployments can move the threshold
-    without re-importing the module."""
-    return int(
-        os.environ.get(
-            "SPARK_GRAFT_TFR_BUFFER_MIN_BYTES", str(64 * 1024 * 1024)
+def _read_record(
+    fh, path: str, offset: int, eof_ok: bool = False
+) -> tuple[int, str] | None:
+    """The one record-frame parser: read the record at byte ``offset``,
+    where ``fh`` is positioned, and verify its checksum. Returns None
+    at a clean end of file when ``eof_ok`` (the sequential reader's
+    stop). Every other short read raises with the file and offset —
+    including a stale/garbage random-access offset (an index sidecar
+    paired with the wrong shard), which must not surface as a bare
+    struct.error (r12 review catch)."""
+    header = fh.read(4)
+    if eof_ok and not header:
+        return None
+    if len(header) < 4:
+        raise IOError(f"{path}: truncated length header at offset {offset}")
+    (length,) = struct.unpack("<I", header)
+    payload = fh.read(length)
+    trailer = fh.read(4)
+    if len(payload) < length or len(trailer) < 4:
+        raise IOError(f"{path}: truncated record at offset {offset}")
+    (want,) = struct.unpack("<I", trailer)
+    got = xor_fold(payload)
+    if got != want:
+        raise IOError(
+            f"{path}: checksum mismatch at offset {offset} "
+            f"(stored {want:#010x}, computed {got:#010x})"
         )
-    )
-
-
-def _read_records_buffered(path: str) -> Iterator[tuple[int, str]]:
-    """Whole-shard buffer framing — identical records, identical
-    fail-loudly offsets/messages as the scalar loop."""
-    with open(path, "rb") as fh:
-        buf = fh.read()
-    n = len(buf)
-    offset = 0
-    while offset < n:
-        if offset + 4 > n:
-            raise IOError(
-                f"{path}: truncated length header at offset {offset}"
-            )
-        (length,) = struct.unpack_from("<I", buf, offset)
-        payload_end = offset + 4 + length
-        if payload_end + 4 > n:
-            raise IOError(f"{path}: truncated record at offset {offset}")
-        payload = buf[offset + 4 : payload_end]
-        (want,) = struct.unpack_from("<I", buf, payload_end)
-        got = xor_fold(payload)
-        if got != want:
-            raise IOError(
-                f"{path}: checksum mismatch at offset {offset} "
-                f"(stored {want:#010x}, computed {got:#010x})"
-            )
-        rec = json.loads(payload)
-        yield rec["doc_id"], rec["text"]
-        offset = payload_end + 4
+    rec = json.loads(payload)
+    return rec["doc_id"], rec["text"]
 
 
 def read_records(path: str) -> Iterator[tuple[int, str]]:
-    """Parse one container file, verifying every checksum. Shards of
-    at least :func:`_buffer_min_bytes` take the buffered framing path
-    (r15, guide §6 — production shards are 100s of MB where the
-    per-record syscall pair dominates); fixture-scale shards keep the
-    scalar loop that measured faster at that size."""
-    if os.path.getsize(path) >= _buffer_min_bytes():
-        yield from _read_records_buffered(path)
-        return
+    """Parse one container file front to back, verifying every
+    checksum; stops at a clean end of file."""
     with open(path, "rb") as fh:
         offset = 0
-        while True:
-            header = fh.read(4)
-            if not header:
-                return
-            if len(header) < 4:
-                raise IOError(
-                    f"{path}: truncated length header at offset {offset}"
-                )
-            (length,) = struct.unpack("<I", header)
-            payload = fh.read(length)
-            trailer = fh.read(4)
-            if len(payload) < length or len(trailer) < 4:
-                raise IOError(
-                    f"{path}: truncated record at offset {offset}"
-                )
-            (want,) = struct.unpack("<I", trailer)
-            got = xor_fold(payload)
-            if got != want:
-                raise IOError(
-                    f"{path}: checksum mismatch at offset {offset} "
-                    f"(stored {want:#010x}, computed {got:#010x})"
-                )
-            rec = json.loads(payload)
-            yield rec["doc_id"], rec["text"]
-            offset += 8 + length
+        while (rec := _read_record(fh, path, offset, eof_ok=True)) is not None:
+            yield rec
+            offset = fh.tell()
 
 
 class TFRecordLiteReader(DataSourceReader):
@@ -217,46 +181,16 @@ def write_records_indexed(
     with open(path, "ab") as fh:
         for doc_id, text in rows:
             index.append((int(doc_id), fh.tell()))
-            payload = json.dumps(
-                {"doc_id": int(doc_id), "text": text}
-            ).encode("utf-8")
-            fh.write(struct.pack("<I", len(payload)))
-            fh.write(payload)
-            fh.write(struct.pack("<I", xor_fold(payload)))
+            fh.write(_frame(doc_id, text))
     return index
-
-
-def _read_one_at(fh, path: str, offset: int) -> tuple[int, str]:
-    """Shared random-access record parse with the same fail-loudly
-    truncation contract as the sequential reader: a stale/garbage
-    offset (e.g. an index sidecar paired with the wrong shard) must
-    name the file and offset, not surface as a bare struct.error from
-    a short ``fh.read`` (r12 review catch)."""
-    fh.seek(offset)
-    header = fh.read(4)
-    if len(header) < 4:
-        raise IOError(f"{path}: truncated length header at offset {offset}")
-    (length,) = struct.unpack("<I", header)
-    payload = fh.read(length)
-    trailer = fh.read(4)
-    if len(payload) < length or len(trailer) < 4:
-        raise IOError(f"{path}: truncated record at offset {offset}")
-    (want,) = struct.unpack("<I", trailer)
-    got = xor_fold(payload)
-    if got != want:
-        raise IOError(
-            f"{path}: checksum mismatch at offset {offset} "
-            f"(stored {want:#010x}, computed {got:#010x})"
-        )
-    rec = json.loads(payload)
-    return rec["doc_id"], rec["text"]
 
 
 def read_record_at(path: str, offset: int) -> tuple[int, str]:
     """Random-access read of ONE record by byte offset, checksum
     verified — O(record), independent of shard size."""
     with open(path, "rb") as fh:
-        return _read_one_at(fh, path, offset)
+        fh.seek(offset)
+        return _read_record(fh, path, offset)
 
 
 def read_records_at(
@@ -269,5 +203,6 @@ def read_records_at(
     out: list[tuple[int, str]] = []
     with open(path, "rb") as fh:
         for offset in offsets:
-            out.append(_read_one_at(fh, path, offset))
+            fh.seek(offset)
+            out.append(_read_record(fh, path, offset))
     return out

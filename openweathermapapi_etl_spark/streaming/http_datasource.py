@@ -20,8 +20,8 @@ fetches. Same reference semantics, new mounting point:
 The *simple* reader variant runs in the source's Python runner process
 and ships rows to executors — the right trade at the reference's
 12-requests-per-tick scale (the partition-planning
-DataSourceStreamReader variant is the escape hatch for huge city
-lists, same seam as fetch_documents_distributed). Because the runner
+DataSourceStreamReader variant, :class:`WeatherHTTPDistDataSource`, is
+the escape hatch for huge city lists). Because the runner
 is a SEPARATE process (driver-side objects don't reach it) and
 DataSource options are strings, the test seam is a ``canned`` option
 carrying JSON response queues per city; absent that, the reader builds

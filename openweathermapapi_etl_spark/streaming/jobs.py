@@ -21,7 +21,8 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..session import conf_window
 
-#: State-partition count for replay streams. ``spark.sql.shuffle.
+#: State-partition count for replay streams, also what layout audits
+#: (state-metadata ``numPartitions``) pin. ``spark.sql.shuffle.
 #: partitions`` at query START is what a stateful streaming query
 #: locks into its checkpoint as the state-store partition count — it
 #: is a per-job DEPLOYMENT knob (sized to peak key throughput;
@@ -32,27 +33,19 @@ from ..session import conf_window
 #: delta + commit files EVERY batch — measured at sf0.1: the full-
 #: outer join drops 16.0s -> 6.1s going 32 -> 8. Production sizes UP
 #: from throughput for the same reason the harness sizes down.
-_STREAM_PARTITIONS = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8")
-
-
-def stream_partitions() -> int:
-    """The state-partition count replay streams lock into their
-    checkpoints (see ``_STREAM_PARTITIONS``) — exposed so layout
-    audits (state-metadata numPartitions) pin the same number the
-    stream actually started with, not the session's batch default."""
-    return int(_STREAM_PARTITIONS)
+STREAM_PARTITIONS = 8
 
 
 def stream_conf_window(spark: SparkSession):
     """``conf_window`` pinning the replay-stream state-partition count
-    around a stream start (see ``_STREAM_PARTITIONS``). Every helper
+    around a stream start (see ``STREAM_PARTITIONS``). Every helper
     below opens one; queries that ``.start()`` directly should too.
     Wrapping only the start+drain span is sufficient AND required:
     sufficient because the partition count is read once at query
     start, required so the surrounding batch plans (oracle compares,
     replay-file splits) keep the session's full parallelism."""
     return conf_window(
-        spark, {"spark.sql.shuffle.partitions": _STREAM_PARTITIONS}
+        spark, {"spark.sql.shuffle.partitions": str(STREAM_PARTITIONS)}
     )
 
 

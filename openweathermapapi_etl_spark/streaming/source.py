@@ -13,21 +13,20 @@ DataFrame, and merges via M1 — preserving the reference's semantics:
 - idempotent merge per batch (A11).
 
 The fetcher is injectable (tests use canned JSON documents; production
-uses ``requests`` if present). For a huge city list the fetch moves
-executor-side: :func:`fetch_documents_distributed` runs it as
-``mapInPandas`` over a cities DataFrame and
-:func:`make_distributed_batch_processor` is the matching foreachBatch
-callback — the downstream plan is identical to the driver-side loop.
+uses ``requests`` if present). A city list too large for the driver
+loop belongs on A1c, the ``weather_http_dist`` DataSource
+(streaming/http_datasource.py), which fetches one city per executor
+task.
 """
 
 from __future__ import annotations
 
 import json
 import os
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -107,9 +106,8 @@ def make_batch_processor(
         raw = spark.createDataFrame(
             pa.table({"value": pa.array([json.dumps(d) for d in docs], pa.string())})
         )
-        # from_json with the explicit schema — the same spelling the
-        # distributed twin uses; the old createDataFrame→.rdd→
-        # spark.read.json(RDD) round-trip re-ran the parallelize per
+        # from_json with the explicit schema: the old createDataFrame→
+        # .rdd→spark.read.json(RDD) round-trip re-ran the parallelize per
         # action through a deprecated overload (r11 review cleanup).
         raw_parsed = raw.select(
             F.from_json("value", WEATHER_RAW).alias("d")
@@ -128,92 +126,6 @@ def make_batch_processor(
     return process_batch
 
 
-def fetch_documents_distributed(
-    spark: SparkSession,
-    fetcher: Fetcher,
-    city_list: list[str],
-    n_partitions: int | None = None,
-) -> DataFrame:
-    """A1 scale flavor: run the HTTP fetch EXECUTOR-side as
-    ``mapInPandas`` over a cities DataFrame (the path source.py's
-    module docstring promises for large city lists — at the reference's
-    12 cities the driver loop is fine; at 100k sensor endpoints the
-    driver becomes the bottleneck and rate-limit amplifier).
-
-    Returns a DataFrame of raw JSON document strings (column ``raw``).
-    The fetch is LAZY — it executes inside whatever job first consumes
-    the result, so a failed fetch fails that job before any commit
-    (batch atomicity, A7). The fetcher is pickled to each task: state
-    mutated by one task (e.g. a canned queue) is NOT visible to others
-    or to later batches — injectable fetchers must be stateless per
-    call in this mode (the production ``requests`` fetcher is).
-    """
-    n = n_partitions or min(
-        len(city_list), spark.sparkContext.defaultParallelism
-    )
-    # Round-robin repartition(n), NOT repartition(n, "city"): hash
-    # partitioning collides — some partitions carry 2-3 cities while
-    # others sit empty, so wall-clock becomes 2-3 SEQUENTIAL fetches
-    # per partition instead of one (r11 review catch). Round-robin
-    # spreads the already-distinct city rows evenly by construction.
-    cities_df = spark.createDataFrame(
-        [(c,) for c in city_list], "city string"
-    ).repartition(n)
-
-    def fetch_partition(batches: Iterator) -> Iterator:
-        import pandas as pd  # noqa: PLC0415 (worker-side import)
-
-        for pdf in batches:
-            if len(pdf):
-                yield pd.DataFrame(
-                    {"raw": [json.dumps(fetcher(c)) for c in pdf["city"]]}
-                )
-
-    return cities_df.mapInPandas(fetch_partition, "raw string")
-
-
-def make_distributed_batch_processor(
-    spark: SparkSession,
-    fetcher: Fetcher,
-    table: VersionedParquetTable,
-    city_list: list[str],
-    raw_log_root: str | None = None,
-    n_partitions: int | None = None,
-) -> Callable:
-    """Executor-side twin of :func:`make_batch_processor` — same
-    semantics (A7 atomicity, A10 distinct, A11 merge, A16 bronze), with
-    the fetch distributed via :func:`fetch_documents_distributed`.
-
-    Atomicity shifts from "fetch eagerly before writing" to "fetch
-    inside the write job": a mid-partition fetch failure fails the job,
-    and the M1 version pointer is only moved after a fully successful
-    write, so nothing is committed (pinned by tests/test_weather_pipeline.py::
-    test_distributed_fetch_mid_partition_failure_aborts_batch). The raw
-    DataFrame is persisted for the batch so bronze logging + merge run
-    ONE fetch, not one per action.
-    """
-
-    def process_batch(batch_df, batch_id: int) -> None:
-        raw = fetch_documents_distributed(spark, fetcher, city_list, n_partitions)
-        raw.persist()
-        try:
-            if raw_log_root:
-                # Same per-batch overwrite discipline as the driver-side
-                # path: a retried batch_id replaces, never double-logs.
-                raw.write.mode("overwrite").text(
-                    os.path.join(raw_log_root, f"batch={batch_id}")
-                )
-            raw_parsed = raw.select(
-                F.from_json("raw", WEATHER_RAW).alias("d")
-            ).select("d.*")
-            staged = transform_raw(raw_parsed).distinct()  # A10
-            table.upsert(spark, staged, keys=WEATHER_KEYS)  # A11/M1
-        finally:
-            raw.unpersist()
-
-    return process_batch
-
-
 def http_microbatch_query(
     spark: SparkSession,
     fetcher: Fetcher,
@@ -221,15 +133,12 @@ def http_microbatch_query(
     cities: list[str] | None = None,
     interval: str = "5 minutes",
     raw_log_root: str | None = None,
-    distributed: bool = False,
     checkpoint_location: str | None = None,
 ) -> StreamingQuery:
     """Start the streaming ETL: rate-clock → fetch → transform → M1.
 
     ``raw_log_root``: optional bronze zone — append the raw documents
     as JSON per batch (A16, more useful than the reference's log lines).
-    ``distributed``: fetch executor-side via mapInPandas (the large-
-    city-list scale path) instead of the driver loop.
     ``checkpoint_location``: REQUIRED for any restartable deployment
     that logs bronze — without it every restart gets a fresh temp
     checkpoint, batch ids reset to 0, and the bronze writer's
@@ -240,8 +149,7 @@ def http_microbatch_query(
     """
     city_list = cities or DEFAULT_CITIES
     table = VersionedParquetTable(table_root)
-    builder = make_distributed_batch_processor if distributed else make_batch_processor
-    process_batch = builder(
+    process_batch = make_batch_processor(
         spark, fetcher, table, city_list, raw_log_root
     )
     clock = spark.readStream.format("rate").option("rowsPerSecond", 1).load()

@@ -139,6 +139,44 @@ def test_affected_modules_follows_reverse_imports():
     assert setsim not in cause
 
 
+def test_package_reads_only_known_env_vars():
+    """The package reads exactly four environment variables: the core
+    count, driver memory, the fixture directory and the API key, all
+    deployment settings. A new read (a new option) must be added here on
+    purpose. Found by AST over ``os.environ.get(...)``,
+    ``os.environ[...]`` and ``os.getenv(...)``; a non-literal name
+    shows up as its source text and fails the comparison."""
+    import ast
+
+    names = set()
+    pkg = os.path.join(REPO, "openweathermapapi_etl_spark")
+    for dirpath, _dirs, files in os.walk(pkg):
+        for fn in files:
+            if not fn.endswith(".py"):
+                continue
+            with open(os.path.join(dirpath, fn)) as fh:
+                tree = ast.parse(fh.read())
+            for node in ast.walk(tree):
+                if isinstance(node, ast.Call) and ast.unparse(node.func) in (
+                    "os.environ.get",
+                    "os.getenv",
+                ):
+                    arg = node.args[0]
+                elif isinstance(node, ast.Subscript) and (
+                    ast.unparse(node.value) == "os.environ"
+                ):
+                    arg = node.slice
+                else:
+                    continue
+                names.add(arg.value if isinstance(arg, ast.Constant) else ast.unparse(arg))
+    assert names == {
+        "SPARK_GRAFT_CPUS",
+        "SPARK_DRIVER_MEM",
+        "SPARK_GRAFT_SF_DIR",
+        "OPENWEATHERMAP_API_KEY",
+    }
+
+
 def test_bench_isolated_failures_isolated_from_timings():
     """Failed queries land in "failed", never as sentinel values in
     "queries" (r12 advice: a -1.0 in the timing map poisons any

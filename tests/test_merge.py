@@ -101,13 +101,29 @@ def test_null_key_upsert_is_idempotent_and_unique(spark):
 
 
 def test_null_key_upsert_broadcast_path(spark):
-    """The eqNullSafe condition must hold on the forced-broadcast anti
-    join too (both code paths share it, but the broadcast plan is the
-    production regime — reference: 12-row batches)."""
+    """The eqNullSafe condition must hold on the broadcast anti join,
+    the production regime (reference: 12-row batches): a batch built
+    from a ``pyarrow.Table`` is a LocalRelation of known size, which
+    Catalyst broadcasts."""
+    import pyarrow as pa
+
     old = make_df(spark, [(None, 1, "n1"), ("b", 1, "y")])
-    upd = make_df(spark, [(None, 3, "n3"), ("b", 2, "y2")])
-    out = keyed_upsert(old, upd, keys=["k"], broadcast_updates=True)
+    upd = spark.createDataFrame(
+        pa.table(
+            {
+                "k": pa.array([None, "b"], pa.string()),
+                "ord": pa.array([3, 2], pa.int32()),
+                "val": pa.array(["n3", "y2"], pa.string()),
+            }
+        )
+    )
+    out = keyed_upsert(old, upd, keys=["k"])
     assert _rows(out) == {(None, 3, "n3"), ("b", 2, "y2")}
+    assert out.filter(F.col("k").isNull()).count() == 1
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    joins = [line for line in plan.splitlines() if "Join" in line]
+    assert joins and all("BroadcastHashJoin" in j for j in joins), plan
+    assert any("LeftAnti" in j for j in joins), plan
 
 
 def test_pk_uniqueness_by_construction(spark):
@@ -2665,6 +2681,24 @@ def test_file_pruned_upsert_widening_batch_rewrites_whole_table(
     out = table.read(spark)
     assert dict(out.dtypes)["ord"] == "bigint"
     assert _rows(out) == {("a", 2**40, "a2")} | {(k, 0, k) for k in "bcd"}
+
+
+def test_partitioned_upsert_widening_batch_rewrites_whole_table(spark, tmp_path):
+    """The partition-pruned upsert shares the file-pruned path's type
+    guard. Linking partition p0's int files beside a rewritten p1 of
+    doubles leaves a version the reader rejects (it takes its schema
+    from the first partition); the whole table is rewritten instead,
+    with the same result as on an unpartitioned table."""
+    wide = spark.createDataFrame([("k2", 3.5, "p1")], "k string, ord double, val string")
+    got = {}
+    for name, partition_by in (("part", "val"), ("flat", None)):
+        table = VersionedParquetTable(str(tmp_path / name), partition_by=partition_by)
+        table.overwrite(make_df(spark, [("k1", 1, "p0"), ("k2", 2, "p1")]))
+        table.upsert(spark, wide, keys=["k"])
+        out = table.read(spark).select("k", "ord", "val")
+        assert dict(out.dtypes)["ord"] == "double", name
+        got[name] = _rows(out)
+    assert got["part"] == got["flat"] == {("k1", 1.0, "p0"), ("k2", 3.5, "p1")}
 
 
 def test_file_pruned_upsert_after_mor_delete_keeps_rows_deleted(

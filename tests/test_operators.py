@@ -764,50 +764,38 @@ def test_tfrecord_lite_roundtrip_and_corruption_raises(tmp_path):
         list(read_records(path))
 
 
-def test_tfrecord_buffered_path_matches_scalar_loop(tmp_path, monkeypatch):
-    """The r15 size-gated buffered framing path must produce IDENTICAL
-    rows and IDENTICAL fail-loudly errors (message + offset) as the
-    scalar loop, driven through the public ``read_records`` by moving
-    the threshold env knob: 0 forces buffered, huge forces scalar."""
+def test_tfrecord_sequential_and_random_access_raise_identical_errors(tmp_path):
+    """Sequential and random-access reads share one frame parser: for
+    each corruption of the second record, ``read_records`` and
+    ``read_record_at`` at that record's offset raise the same message,
+    naming the same file and offset."""
     import pytest as _pytest
 
     from openweathermapapi_etl_spark.sources.tfrecord import (
+        read_record_at,
         read_records,
-        write_records,
+        write_records_indexed,
     )
 
-    path = str(tmp_path / "shard-b.tfr")
-    rows = [(1, "hello world"), (2, ""), (3, "x" * 1000), (4, "tail")]
-    assert write_records(path, iter(rows)) == 4
-
-    def rd(threshold: str):
-        monkeypatch.setenv("SPARK_GRAFT_TFR_BUFFER_MIN_BYTES", threshold)
-        return list(read_records(path))
-
-    assert rd("0") == rd("999999999") == rows
-
-    # Corruption: both paths name the same offset in the same message.
+    path = str(tmp_path / "shard-e.tfr")
+    index = write_records_indexed(path, iter([(1, "hello world"), (2, "x" * 100)]))
+    off = index[1][1]
     good = open(path, "rb").read()
-    data = bytearray(good)
-    data[6] ^= 0xFF
-    open(path, "wb").write(bytes(data))
-    msgs = []
-    for threshold in ("0", "999999999"):
-        monkeypatch.setenv("SPARK_GRAFT_TFR_BUFFER_MIN_BYTES", threshold)
-        with _pytest.raises(IOError, match="checksum mismatch") as ei:
+    flipped = bytearray(good)
+    flipped[off + 6] ^= 0xFF
+    corruptions = {
+        "checksum mismatch": bytes(flipped),
+        "truncated length header": good[: off + 2],
+        "truncated record": good[:-2],
+    }
+    for what, data in corruptions.items():
+        open(path, "wb").write(data)
+        with _pytest.raises(IOError) as seq:
             list(read_records(path))
-        msgs.append(str(ei.value))
-    assert msgs[0] == msgs[1]
-
-    # Truncation mid-record: both paths raise at the same offset.
-    open(path, "wb").write(bytes(good[: len(good) - 2]))
-    msgs = []
-    for threshold in ("0", "999999999"):
-        monkeypatch.setenv("SPARK_GRAFT_TFR_BUFFER_MIN_BYTES", threshold)
-        with _pytest.raises(IOError, match="truncated") as ei:
-            list(read_records(path))
-        msgs.append(str(ei.value))
-    assert msgs[0] == msgs[1]
+        with _pytest.raises(IOError) as at:
+            read_record_at(path, off)
+        assert str(seq.value) == str(at.value), what
+        assert str(seq.value).startswith(f"{path}: {what} at offset {off}")
 
 
 def test_tfrecord_random_access_bad_offset_names_file_and_offset(tmp_path):

@@ -484,7 +484,7 @@ def test_statestore_reader_matches_batch_and_metadata_layout(spark):
     ckpt = os.path.join(
         tempfile.gettempdir(), f"spark_graft_b54_ckpt_{os.getpid()}"
     )
-    from openweathermapapi_etl_spark.streaming.jobs import stream_partitions
+    from openweathermapapi_etl_spark.streaming.jobs import STREAM_PARTITIONS
 
     meta = spark.read.format("state-metadata").load(ckpt).collect()
     assert len(meta) == 1
@@ -492,7 +492,7 @@ def test_statestore_reader_matches_batch_and_metadata_layout(spark):
     # The layout the checkpoint locked is the replay-stream partition
     # window's count (stream_conf_window), NOT the session's batch
     # default — the same per-job sizing a production deployment pins.
-    assert meta[0]["numPartitions"] == stream_partitions()
+    assert meta[0]["numPartitions"] == STREAM_PARTITIONS
     # ...and the window RESTORED the session default afterwards, so
     # co-resident batch plans keep their full parallelism.
     assert (

@@ -207,53 +207,6 @@ def test_processing_time_trigger_fires_on_real_clock(spark, tmp_path):
     assert VersionedParquetTable(root).current_version() >= 1
 
 
-def test_distributed_fetch_matches_driver_side(spark, tmp_path):
-    """A1 scale flavor: the mapInPandas executor-side fetch produces the
-    same silver table as the driver-side loop for the same documents,
-    bronze log included."""
-    from openweathermapapi_etl_spark.streaming.source import (
-        make_distributed_batch_processor,
-    )
-
-    cities = ["CityA", "CityB"]
-    docs = {
-        "CityA": [dict(DOC, name="CityA")],
-        "CityB": [dict(DOC, name="CityB", main={"temp": 3.0, "feels_like": 1.0, "humidity": 50})],
-    }
-    bronze = str(tmp_path / "bronze_dist")
-    table = VersionedParquetTable(str(tmp_path / "tbl_dist"))
-    process = make_distributed_batch_processor(
-        spark, make_canned_fetcher(docs), table, cities, raw_log_root=bronze
-    )
-    process(None, 0)
-    rows = {(r.City_Name, r.Temperature) for r in table.read(spark).collect()}
-    assert rows == {("CityA", 18.5), ("CityB", 3.0)}
-    logged = spark.read.text(os.path.join(bronze, "batch=0"))
-    assert sorted(json.loads(r.value)["name"] for r in logged.collect()) == cities
-
-
-def test_distributed_fetch_mid_partition_failure_aborts_batch(spark, tmp_path):
-    """A7 atomicity in the executor-side flavor: the fetch runs INSIDE
-    the write job, so one city failing mid-partition fails the job and
-    the M1 version pointer never moves — nothing committed, same
-    all-or-nothing guarantee as the driver-side loop."""
-    import pytest
-
-    from openweathermapapi_etl_spark.streaming.source import (
-        make_distributed_batch_processor,
-    )
-
-    cities = ["CityA", "CityBoom"]
-    # CityA has a document; CityBoom's queue is empty → the task
-    # running its partition raises mid-job.
-    fetcher = make_canned_fetcher({"CityA": [dict(DOC, name="CityA")]})
-    table = VersionedParquetTable(str(tmp_path / "tbl_atomic"))
-    process = make_distributed_batch_processor(spark, fetcher, table, cities)
-    with pytest.raises(Exception, match="no canned response left"):
-        process(None, 0)
-    assert table.current_version() is None
-
-
 def test_failed_fetch_aborts_whole_batch(spark, tmp_path):
     """A7 atomicity: one city succeeds, the next raises — the batch
     must abort with NOTHING written (the reference commits once per
