@@ -135,10 +135,10 @@ def main() -> None:
             force(QUERIES[name](spark, sf_dir))
     # Headline mode reports MIN-OF-3 per query: single-shot numbers
     # carry a ~1.15x session/cache noise band, and the host shows
-    # multi-second CPU-steal bursts (SCALE.md host-drift note); with
-    # three runs a single burst is discardable. The first (cold) run
-    # pays file listing + codegen + JIT; the min is the comparable
-    # figure. --all stays single-shot per sweep.
+    # multi-second CPU-steal bursts (SCALE.md "Measuring on a shared
+    # host"); with three runs a single burst is discardable. The first
+    # (cold) run pays file listing + codegen + JIT; the min is the
+    # comparable figure. --all stays single-shot per sweep.
     repeats = 1 if run_all else 3
     timings: dict[str, float] = {}
     for name in names:

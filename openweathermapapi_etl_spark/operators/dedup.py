@@ -531,7 +531,7 @@ def winnow_fingerprints(
     values. Deliberately window-based, NOT a
     ``transform(sequence, i -> array_min(slice(hs, i, w)))`` lambda:
     an outer expression inside a higher-order lambda re-evaluates per
-    element (the word_shingles lesson, SCALE.md round-7f) — the
+    element (the word_shingles lesson, SCALE.md "Curation layer") — the
     window spelling computes the hash array once per row and shuffles
     on the high-cardinality document id. Returns (id, fp) distinct
     rows — the join-ready fingerprint table.

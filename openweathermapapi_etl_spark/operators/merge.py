@@ -442,13 +442,8 @@ class VersionedParquetTable:
         immutable once committed — upserts write a NEW dir and swap the
         pointer, so an as-of read needs no log replay and no lock).
         Raises ``FileNotFoundError`` for a vacuumed or never-written
-        version — loud, never a silent empty frame."""
-        d = self._version_dir(version)
-        if not os.path.isdir(d):
-            raise FileNotFoundError(
-                f"version {version} not on disk under {self.root} "
-                f"(retained: {self.versions()}) — vacuumed or never written"
-            )
+        version — loud, never a silent empty frame (the check lives in
+        :meth:`_has_data_files`, the first step of the raw read)."""
         df = self._read_raw_version(spark, version)
         # M21 merge-on-read: a tombstone set beside the version applies
         # at READ time (null-safe anti join on the tombstone columns) —
@@ -1401,20 +1396,20 @@ class VersionedParquetTable:
         it recent. Empty when no log exists — pre-history tables.
 
         ``entries`` lets a caller that needs both orderings (vacuum)
-        parse the log ONCE and share the list; never mutated here."""
+        parse the log ONCE and share the list; never mutated here. They
+        come from :meth:`_history_entries`, which already drops bad
+        lines and normalises ``version``/``committed_at``. O(N): an
+        insertion-ordered dict moves a re-committed version to the end
+        by pop + re-insert."""
         if entries is None:
             entries = self._history_entries()
         if order == "committed_at":
-            entries = sorted(entries, key=lambda e: e.get("committed_at", 0.0))
-        seen: list[int] = []
+            entries = sorted(entries, key=lambda e: e["committed_at"])
+        seen: dict[int, None] = {}
         for e in entries:
-            if "version" not in e:
-                continue  # hand-edited / foreign line: not a commit
-            v = int(e["version"])
-            if v in seen:
-                seen.remove(v)
-            seen.append(v)
-        return seen
+            seen.pop(e["version"], None)
+            seen[e["version"]] = None
+        return list(seen)
 
     def _vacuum(self, keep: int, retain: int | None = None) -> None:
         """Drop retired snapshots, keeping the newest ``retain``

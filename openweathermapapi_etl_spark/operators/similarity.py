@@ -283,9 +283,10 @@ def semdedup(
     :func:`kmeans_update` centroids in; the deterministic
     ``id % centroid_mod`` stand-in keeps this oracle-expressible).
 
-    Duplicate blowup (sf1 probe, SCALE.md: x100 cell pair work for x10
-    data at duplicate-factor 10): ``max_cell_witnesses=M`` bounds each
-    cell's pair work at ``M x n_c`` — exact under duplication, where
+    Duplicate blowup (sf1 probe, SCALE.md "Similarity search": x100
+    cell pair work for x10 data at duplicate-factor 10):
+    ``max_cell_witnesses=M`` bounds each cell's pair work at
+    ``M x n_c`` — exact under duplication, where
     every dup group's min-id witness sorts into the cell's first M ids
     (see :func:`_semdedup_candidates`; regression-pinned by
     test_semdedup_witness_cap_bounds_pair_work). Default ``None``

@@ -18,7 +18,7 @@ The rewrite is semantics-preserving, so its DuckDB oracle is the plain
 single-stage aggregation — which is exactly what makes it safely
 verifiable.
 
-MEASURED (r13 zipf probe, SCALE.md round-13): on a 7.5M-row orders
+MEASURED (zipf probe, SCALE.md "Skew"): on a 7.5M-row orders
 fixture with a 10%-mass hot custkey, the plain groupBy(sum/count)
 reads 1.55 s vs the salted rewrite's 2.23 s — partial aggregation
 really does absorb sum/count skew (the hot key's map-side partials
@@ -86,8 +86,8 @@ def salted_join(
     plain broadcast when the small side fits (this exists for when it
     does NOT). Semantics-preserving: the oracle is the plain join.
 
-    The big⋈small contract is MEASURED, not advisory (r13 zipf probe,
-    SCALE.md round-13): on a 30M-row fact with a 10%-mass hot key
+    The big⋈small contract is MEASURED, not advisory (zipf probe,
+    SCALE.md "Skew"): on a 30M-row fact with a 10%-mass hot key
     joined to a 7.5M-row "small" side (a 4:1 ratio — NOT small),
     n_salts=8 replication turned a 4.1 s naive sort-merge join into
     23.6 s (5.7× worse): the 60M replicated rows dwarf any straggler

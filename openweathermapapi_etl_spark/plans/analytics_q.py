@@ -808,8 +808,8 @@ def c02_dedup_pr_audit_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     prescribes for 100 TB, implemented: the exact prefix-filtered
     ground truth — the audit's only super-linear stage (measured 21×
     wall for 10× data on the duplicate-factor-10 sf1 fixture,
-    SCALE.md) — runs on a deterministic 25% document sample
-    (salted-hash bucket, the c07_hash_split discipline), while the
+    SCALE.md "Dedup family") — runs on a deterministic 25% document
+    sample (salted-hash bucket, the c07_hash_split discipline), while the
     SYSTEM UNDER TEST — the production capped-LSH banding — still runs
     over the FULL corpus, unchanged: an audit must never alter what it
     audits. Candidate pairs are then restricted to the sampled pair

@@ -444,9 +444,10 @@ def c06_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct-text representatives only, clusters close, and every
     non-canonical member drops; unpaired documents survive untouched.
 
-    The stage order is a measured scale decision (r13 zipf probe,
-    SCALE.md): on the mega-cluster fixture (10% of docs sharing one
-    text — the boilerplate-page shape every raw crawl contains) the
+    The stage order is a measured scale decision (zipf probe,
+    SCALE.md "Dedup family"): on the mega-cluster fixture (10% of docs
+    sharing one text — the boilerplate-page shape every raw crawl
+    contains) the
     banding-first spelling fed a C(n,2) same-text clique into the CC
     step (7.0× wall at equal volume); exact-first removes the clique
     at linear cost because a same-text group enters banding as ONE
@@ -810,8 +811,8 @@ def c07_group_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     r14 rebase: the cluster pass is dedup_clusters_compact (exact
     collapse → band reps → CC → linear label join) — the banding-first
     spelling fed the zipf mega-cluster's C(n,2) clique into CC for
-    labels that exact-first computes linearly (97.2 s → measured
-    post-rebase in SCALE.md r14 at equal volume). Labels are
+    labels that exact-first computes linearly (97.2 s → 6.1 s at
+    equal volume, SCALE.md "Graph"). Labels are
     pytest-pinned identical below the bucket cap; the oracle carries
     the same stage order."""
     from ..operators.sampling import split_bucket
@@ -4069,7 +4070,7 @@ def c07_soft_dedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicate-sized, far smaller than the corpus, so the join
     broadcasts at scale. The banding-first spelling paid the zipf
     mega-cluster's C(n,2) clique for sizes the exact-group counts give
-    linearly (93.0 s → measured post-rebase in SCALE.md r14); sizes
+    linearly (93.0 s → 7.4 s at equal volume, SCALE.md "Graph"); sizes
     are pytest-pinned identical below the bucket cap, and the oracle
     composes the exact-first cluster CTE. Weight is one IEEE division
     of exact integers, bit-identical cross-engine."""
@@ -4557,7 +4558,8 @@ def c02_source_overlap_matrix_hashkey(
     fixed 8-byte key instead of the ~25-char 4-token gram text — here,
     unlike the 2-token boilerplate chunks, the key is ~3x wider than
     the hash, so the wire savings have a real shot at paying for the
-    hash pass (measured both ways in SCALE.md, not asserted).
+    hash pass (measured both ways in SCALE.md "Dedup family", not
+    asserted).
 
     Semantics-preserving absent collisions (a collision would merge
     two distinct grams' source sets, inflating `shared`), so the

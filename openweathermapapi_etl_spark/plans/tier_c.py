@@ -324,8 +324,8 @@ def c02_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates — the registered c02_embedding_neardup_lsh below).
     Quadratic BY DESIGN (the id_a < id_b triangle is the oracle-exact
     ground truth): measured 21.7x wall for 10x vectors at sf1
-    (SCALE.md round-13) — the documented cost the bucketed flavor
-    exists to avoid."""
+    (SCALE.md "Similarity search") — the documented cost the bucketed
+    flavor exists to avoid."""
     return embedding_neardup_pairs(
         t(spark, sf_dir, "embeddings"), "vec_id", "embedding", threshold=0.4
     )
@@ -1396,8 +1396,8 @@ def c02_winnow_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint, so quotation/plagiarism overlap is DETECTED, not
     estimated — and the shared-fingerprint count grades how much is
     shared. Shape: per-document window min (document-id partitioning,
-    the deliberate non-lambda spelling — SCALE.md round-7f), distinct
-    fingerprint table, fingerprint-bucketed pair join with the LSH
+    the deliberate non-lambda spelling — SCALE.md "Curation layer"),
+    distinct fingerprint table, fingerprint-bucketed pair join with the LSH
     boilerplate cap. Pairs with ≥ 2 shared fingerprints returned."""
     d = t(spark, sf_dir, "documents")
     fps = winnow_fingerprints(d, "text", "doc_id", n=3, w=4, portable=True)
@@ -2025,12 +2025,12 @@ def c02_simhash_radius(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster tightly (~28% of pairs within radius 3 at sf0.001) — the
     operator measures the data; the oracle pins the arithmetic.
 
-    Measured saturation cliff (r12 sf1 probe, SCALE.md): 4.8 s at
-    sf0.1 → ~1119 s at sf1 (233× for 10× docs). 50k docs in a 2^16
-    signature space make bucket density — and the radius-3 OUTPUT
-    pair set itself — grow ~quadratically, so the 16-bit flavor is
-    strictly a correctness fixture; size the signature to the corpus
-    (64-bit keeps density ~constant) before pointing this at real
+    Measured saturation cliff (sf1 probe, SCALE.md "Scale probe at
+    sf1"): 4.8 s at sf0.1 → ~1119 s at sf1 (233× for 10× docs). 50k
+    docs in a 2^16 signature space make bucket density — and the
+    radius-3 OUTPUT pair set itself — grow ~quadratically, so the 16-bit
+    flavor is strictly a correctness fixture; size the signature to the
+    corpus (64-bit keeps density ~constant) before pointing this at real
     data.
 
     r14 rewrite (output-identical, oracle unchanged): the banded

@@ -796,7 +796,7 @@ def c04_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     first formulation measured 4 exchanges vs this one's 1) and NOT
     collect_set over a window (a boilerplate span repeated in millions
     of docs would materialize them all in one agg buffer — the LSH
-    max_bucket lesson, SCALE.md dedup §)."""
+    max_bucket lesson, SCALE.md "Dedup family")."""
     from pyspark.sql import Window as W
 
     docs = t(spark, sf_dir, "documents")
@@ -1501,7 +1501,7 @@ def _bq_word(base: int) -> F.Column:
     # can overflow (DuckDB errors on 1<<63). Unrolled with Python-side
     # bit constants: 32 flat when() terms stay inside whole-stage
     # codegen, and no higher-order lambda means no per-element
-    # re-evaluation hazard (SCALE.md round-7f).
+    # re-evaluation hazard (SCALE.md "Curation layer").
     from functools import reduce
 
     terms = [

@@ -453,8 +453,8 @@ def b49_pandas_udaf_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     once per batch): ``np.partition`` on the raw values replaces the
     original ``Series.sort_values().iloc[1]`` — a full pandas sort
     with index allocation per 7-row frame — for the identical
-    second-largest-with-duplicates value (guide §4.2; r14 isolated
-    A/B: 13.3 s → see OPTIMIZATION_r14.md)."""
+    second-largest-with-duplicates value (isolated A/B 13.3 s →
+    4.9 s, SCALE.md "Measured plan fixes" #10)."""
     import numpy as np
     import pandas as pd
 

@@ -1,5 +1,5 @@
 """Unit pins for the measurement tooling (tools/bench_diff.py,
-tools/bench_isolated.py, tools/changed_queries.py) — the round-12
+tools/changed_queries.py) and the repo's own citations — the round-12
 verdict showed the verification layer itself can harbor false-greens
 (check_parity's typo'd-name "ALL OK"), so the host-drift normalization
 added in round 13 gets the same treatment: pure-python tests that fail
@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import subprocess
 import sys
 
@@ -177,22 +178,36 @@ def test_package_reads_only_known_env_vars():
     }
 
 
-def test_bench_isolated_failures_isolated_from_timings():
-    """Failed queries land in "failed", never as sentinel values in
-    "queries" (r12 advice: a -1.0 in the timing map poisons any
-    downstream sum/min/ratio silently)."""
-    out = subprocess.run(
-        [sys.executable, os.path.join(REPO, "tools", "bench_isolated.py"),
-         "--sf-dir", "/root/testdata/sf0.001", "--runs", "1",
-         "b01_parquet_scan", "zz_definitely_not_a_query"],
-        capture_output=True, text=True, cwd=REPO,
-    )
-    assert out.returncode == 0
-    d = json.loads(out.stdout.strip().splitlines()[-1])
-    # The bogus name lands ONLY in "failed"; the valid query still
-    # gets a real (non-sentinel) timing — the r14 advisor pointed out
-    # the old all-bogus spelling made the >= 0 check vacuously true
-    # against an empty map, pinning nothing.
-    assert d["failed"] == ["zz_definitely_not_a_query"]
-    assert set(d["queries"]) == {"b01_parquet_scan"}
-    assert d["queries"]["b01_parquet_scan"] >= 0
+_HISTORY_DOCS = {
+    "CHANGES.md", "ROADMAP.md", "ISSUE.md", "PAPER.md", "PAPERS.md",
+    "SNIPPETS.md", "SURVEY.md",
+}
+_CITATIONS = re.compile(
+    r"\btools/\w+\.py"
+    r"|\bplans/r\d+[a-z0-9_]*"
+    r"|\b[A-Z][A-Z_]*_r\d+[a-z0-9_]*\.(?:json|md|txt)\b"
+)
+
+
+def test_cited_tools_dumps_and_round_artifacts_exist():
+    """Every ``tools/*.py``, root ``plans/r<N>`` dump dir and round
+    artifact (``NAME_r<N>.json|md|txt``) that a ``.py`` or ``.md`` file
+    names must exist, so a deleted file cannot stay cited. The history
+    docs record deleted files on purpose and are not scanned. Walks the
+    tree without git, skipping hidden and build directories."""
+    skip_dirs = {"__pycache__", "spark-warehouse", "metastore_db", ".work"}
+    missing = set()
+    for dirpath, dirs, files in os.walk(REPO):
+        dirs[:] = [d for d in dirs if not d.startswith(".") and d not in skip_dirs]
+        for fn in files:
+            if not fn.endswith((".py", ".md")):
+                continue
+            if dirpath == REPO and fn in _HISTORY_DOCS:
+                continue
+            path = os.path.join(dirpath, fn)
+            with open(path, encoding="utf-8") as fh:
+                text = fh.read()
+            for m in _CITATIONS.finditer(text):
+                if not os.path.exists(os.path.join(REPO, m.group(0))):
+                    missing.add(f"{os.path.relpath(path, REPO)}: {m.group(0)}")
+    assert not missing, "\n".join(sorted(missing))

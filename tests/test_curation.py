@@ -751,7 +751,7 @@ def test_dedup_corpus_exact_first_equals_banding_first(spark, tmp_path):
     texts share MinHash signatures and min-id survivorship composes
     across stages. (The reorder exists because the banding-first shape
     fed a C(n,2) same-text clique into CC — 7.0x wall on the zipf
-    mega-cluster fixture, SCALE.md r13.)"""
+    mega-cluster fixture, SCALE.md "Dedup family".)"""
     import os
 
     from pyspark.sql import functions as F

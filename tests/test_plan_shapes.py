@@ -878,7 +878,7 @@ def test_stream_starts_are_partition_windowed():
     stream started OUTSIDE ``stream_conf_window`` silently inherits
     the session's 32 batch partitions — 32 near-empty state stores
     per micro-batch, the exact fixed cost that made the stream-stream
-    join family 2.5-3x slower (SCALE.md round-11 section). Every
+    join family 2.5-3x slower (SCALE.md "Streaming"). Every
     ``.writeStream`` in plans/ must either route through a jobs.py
     helper (run_to_memory / run_checkpointed_append / run_foreachbatch
     / run_until_state_drained_query — each opens the window itself) or

@@ -23,7 +23,7 @@ run-to-run on a shared local[32] JVM, and flagging those would bury
 the real signal (the same floor bench.py's own round-over-round
 comparisons have always applied informally).
 
-Control-set normalization (round-13 order #2 — the SCALE.md host-drift
+Control-set normalization (the SCALE.md "Measuring on a shared host"
 protocol, executable): a shared local host drifts whole EPOCHS between
 rounds (r11→r12 measured a uniform 1.21x on untouched code), so a raw
 ratio conflates host speed with code cost. With --control-refs the
@@ -99,7 +99,7 @@ def control_set(old: dict[str, float], new: dict[str, float],
     caught; the median is robust until a majority of control queries
     drift TOGETHER. That majority case (a real uniform regression in
     a hub module) is the documented blind spot — indistinguishable
-    from host drift here; the same-host A/B/A protocol (SCALE.md) is
+    from host drift here; the same-host alternating A/B (SCALE.md) is
     the discriminator."""
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     import subprocess

@@ -33,8 +33,8 @@ Output: one JSON line with the profile, the predicted/measured bytes,
 the verdict under current confs ({would_split, binding_constraint}),
 and threshold_to_engage — the skewedPartitionThresholdInBytes setting
 below which the split WOULD fire (when the factor condition already
-holds). SCALE.md's r14 section demos the tool reproducing the sf5z
-split/no-split behavior from estimates alone.
+holds). SCALE.md "Skew" records the tool reproducing the measured
+split/no-split behavior of a 50x zipf fixture from estimates alone.
 
 Usage:
   python tools/skew_preflight.py --sf-dir /tmp/sf5z --table lineitem \
