@@ -178,9 +178,11 @@ def test_package_reads_only_known_env_vars():
     }
 
 
-_HISTORY_DOCS = {
-    "CHANGES.md", "ROADMAP.md", "ISSUE.md", "PAPER.md", "PAPERS.md",
-    "SNIPPETS.md", "SURVEY.md",
+# Root-level docs that describe the current tree; the other root docs are
+# history and reference notes that name deleted files on purpose.
+_CURRENT_DOCS = {
+    "README.md", "SCALE.md", "BASELINE.md", "FIXTURES.md", "TESTDATA.md",
+    "PLANS.md", "PLANS_FULL.md",
 }
 _CITATIONS = re.compile(
     r"\btools/\w+\.py"
@@ -192,8 +194,8 @@ _CITATIONS = re.compile(
 def test_cited_tools_dumps_and_round_artifacts_exist():
     """Every ``tools/*.py``, root ``plans/r<N>`` dump dir and round
     artifact (``NAME_r<N>.json|md|txt``) that a ``.py`` or ``.md`` file
-    names must exist, so a deleted file cannot stay cited. The history
-    docs record deleted files on purpose and are not scanned. Walks the
+    names must exist, so a deleted file cannot stay cited. Of the root
+    docs only the current-state ones are scanned. Walks the
     tree without git, skipping hidden and build directories."""
     skip_dirs = {"__pycache__", "spark-warehouse", "metastore_db", ".work"}
     missing = set()
@@ -202,7 +204,7 @@ def test_cited_tools_dumps_and_round_artifacts_exist():
         for fn in files:
             if not fn.endswith((".py", ".md")):
                 continue
-            if dirpath == REPO and fn in _HISTORY_DOCS:
+            if dirpath == REPO and fn.endswith(".md") and fn not in _CURRENT_DOCS:
                 continue
             path = os.path.join(dirpath, fn)
             with open(path, encoding="utf-8") as fh:
