@@ -9,7 +9,7 @@
     python -m openweathermapapi_etl_spark sql "SELECT * FROM weather" \\
         --table /tmp/weather [--sf-dir /root/testdata/sf0.01]
 
-`--fixture` replays a JSONL document file in dt-ordered micro-batches
+`--fixture` loads a JSONL document file in one pass and one commit
 (no API key needed); `--live` starts the streaming query against the
 real OpenWeatherMap API (requires OPENWEATHERMAP_API_KEY, A14).
 """

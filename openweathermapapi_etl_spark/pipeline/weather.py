@@ -8,19 +8,33 @@ The reference's whole DAG collapses to one declarative flow
 ``transform_raw`` is the A3-A6 chain as pure column expressions —
 what the reference does row-at-a-time in Python (:126-131) runs here
 as whole-stage-codegen'd JVM expressions over arbitrarily many
-partitions. ``run_batch_pipeline`` replays a document set in dt-order
-micro-batches through the M1 table, mirroring the 5-minute cron runs.
-Streaming flavor lives in ``streaming/``.
+partitions. ``run_batch_pipeline`` loads a document set in one pass,
+equal to replaying the reference's 5-minute cron runs in ``dt`` order.
+Streaming flavor (one version per run) lives in ``streaming/``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.merge import VersionedParquetTable
+from ..operators.merge import VersionedParquetTable, dedup_last_write_wins
 from ..schemas import WEATHER_KEYS, WEATHER_RAW
 from ..sources import read_json
+
+
+def _transform_columns() -> list[Column]:
+    """A3-A6 (see :func:`transform_raw`) as column expressions."""
+    return [
+        F.expr(
+            "timestamp_seconds(dt) + make_interval(0, 0, 0, 0, 0, 0, timezone)"
+        ).alias("Time"),
+        F.col("name").alias("City_Name"),
+        F.array_join(
+            F.transform(F.col("weather"), lambda w: w["description"]), ", "
+        ).alias("Weather_Description"),
+        F.col("main.temp").alias("Temperature"),
+    ]
 
 
 def transform_raw(raw: DataFrame) -> DataFrame:
@@ -33,41 +47,26 @@ def transform_raw(raw: DataFrame) -> DataFrame:
     - A3 nested projection: ``main.temp``             (ref :131)
     - A4 array flatten + ", "-join in array order     (ref :130)
     """
-    return raw.select(
-        F.expr(
-            "timestamp_seconds(dt) + make_interval(0, 0, 0, 0, 0, 0, timezone)"
-        ).alias("Time"),
-        F.col("name").alias("City_Name"),
-        F.array_join(
-            F.transform(F.col("weather"), lambda w: w["description"]), ", "
-        ).alias("Weather_Description"),
-        F.col("main.temp").alias("Temperature"),
-    )
+    return raw.select(*_transform_columns())
 
 
 def run_batch_pipeline(
     spark: SparkSession, jsonl_path: str, table_root: str
 ) -> VersionedParquetTable:
-    """Replay a document file through the full pipeline in dt-ordered
-    micro-batches (each distinct ``dt`` = one reference cron run).
+    """Load a document file into the table in one pass and one commit.
 
-    Per batch: transform → ``distinct()`` (A10 exact-row dedup) →
-    M1 upsert (A11: new keys insert, existing keys overwrite,
-    intra-batch conflicts resolve last-write-wins). The per-batch
-    commit is atomic (version swap), matching the reference's
-    one-commit-per-run (:143,:174).
+    Each distinct ``dt`` is one reference cron run, carried as ``__dt``
+    so one ``distinct()`` is the per-run A10 dedup; last-write-wins on
+    ``__dt`` (a later run wins, NULL loses, the upsert's tie-break
+    inside a run) then equals sequential replay, also where a city's
+    offset change makes two runs share a key. One M1 upsert (A11)
+    commits; an empty file commits an empty version.
     """
     raw = read_json(spark, jsonl_path, WEATHER_RAW)
+    runs = raw.select(*_transform_columns(), F.col("dt").alias("__dt")).distinct()
+    latest = dedup_last_write_wins(runs, WEATHER_KEYS, order_col="__dt")
     table = VersionedParquetTable(table_root)
-    batches = [r[0] for r in raw.select("dt").distinct().orderBy("dt").collect()]
-    for dt in batches:
-        # NULL-safe batch predicate: a NULL dt lands in the batch list
-        # as None, and `dt == None` never matches (three-valued logic)
-        # — the document would silently vanish from the replay instead
-        # of riding one batch with a NULL Time (r12 review catch; the
-        # schema-first contract turns the reference's KeyError into
-        # NULL, so the row must survive to the table).
-        pred = F.col("dt").isNull() if dt is None else F.col("dt") == dt
-        batch = transform_raw(raw.filter(pred)).distinct()
-        table.upsert(spark, batch, keys=WEATHER_KEYS)
+    table.upsert(
+        spark, latest.drop("__dt"), keys=WEATHER_KEYS, updates_key_unique=True
+    )
     return table

@@ -80,13 +80,13 @@ def a03_weather_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def a10_weather_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A7-A11 end-to-end: the full reference pipeline — 4 dt-ordered
-    micro-batches through DISTINCT (A10) + M1 versioned upsert (A11) —
-    against a pure-SQL oracle of the same semantics (exact-dup removal,
-    then last-write-wins per (Time, City_Name)).
+    cron runs through DISTINCT (A10) + M1 versioned upsert (A11), in one
+    pass — against a pure-SQL oracle of the same semantics (exact-dup
+    removal, then last-write-wins per (Time, City_Name)).
 
-    Cross-batch upserts can't collide here (Time embeds dt), so the
-    oracle's single global window equals the sequential batch replay;
-    the within-batch conflict pairs in the fixture are the real test.
+    Ordering each key's rows by dt makes one window equal the replay
+    even when two runs collide on a key. The fixture has none, so the
+    oracle needs no dt term; its in-run conflict pairs are the test.
     """
     prep_only(spark)
     # Per-process path: concurrent harnesses (pytest + parity checker)

@@ -7,15 +7,18 @@ from __future__ import annotations
 import datetime
 import json
 import os
+import random
 
 import pytest
+from pyspark.sql import functions as F
 
 from openweathermapapi_etl_spark.operators.merge import VersionedParquetTable
 from openweathermapapi_etl_spark.pipeline.weather import (
     run_batch_pipeline,
     transform_raw,
 )
-from openweathermapapi_etl_spark.schemas import WEATHER_RAW
+from openweathermapapi_etl_spark.schemas import WEATHER_KEYS, WEATHER_RAW
+from openweathermapapi_etl_spark.sources import read_json
 from openweathermapapi_etl_spark.streaming.source import (
     http_microbatch_query,
     make_canned_fetcher,
@@ -94,9 +97,9 @@ def test_pipeline_e2e_idempotent_rerun(spark, tmp_path):
 
 def test_pipeline_null_dt_document_survives_replay(spark, tmp_path):
     """A document missing ``dt`` decodes as NULL under the schema-first
-    contract (vs the reference's KeyError) — it must ride ONE replay
-    batch with a NULL Time, not silently vanish: the old ``dt == None``
-    batch predicate never matched (three-valued logic, r12 review)."""
+    contract (vs the reference's KeyError) — it must reach the table
+    with a NULL Time, not silently vanish (a ``dt == None`` predicate
+    never matches under three-valued logic, r12 review)."""
     no_dt = {k: v for k, v in DOC.items() if k != "dt"}
     no_dt["name"] = "NullDtCity"
     path = tmp_path / "docs_null_dt.jsonl"
@@ -110,6 +113,158 @@ def test_pipeline_null_dt_document_survives_replay(spark, tmp_path):
     }
     assert ("NullDtCity", True) in rows, rows
     assert ("Rotterdam", False) in rows
+
+
+def _replay_per_dt(spark, jsonl_path, table_root):
+    """The oracle: the per-``dt`` replay ``run_batch_pipeline`` ran
+    before it became one pass, kept verbatim — one reference cron run
+    (one distinct ``dt``) at a time, each its own DISTINCT and upsert."""
+    raw = read_json(spark, jsonl_path, WEATHER_RAW)
+    table = VersionedParquetTable(table_root)
+    batches = [r[0] for r in raw.select("dt").distinct().orderBy("dt").collect()]
+    for dt in batches:
+        pred = F.col("dt").isNull() if dt is None else F.col("dt") == dt
+        batch = transform_raw(raw.filter(pred)).distinct()
+        table.upsert(spark, batch, keys=WEATHER_KEYS)
+    return table
+
+
+_CITIES = {"Oslo": 3600, "Lima": -18000, "Pune": 19800}
+_T0 = 1_700_000_000
+
+
+def _random_docs(seed: int) -> list[dict]:
+    """≤40 documents over 3 cities and 2-3 ``dt`` values an hour apart,
+    with small value vocabularies so keys conflict. Every set holds
+    exact duplicates, NULL and missing ``dt`` and ``timezone``, empty
+    and missing ``weather`` arrays, and three cross-run collisions on
+    one ``(Time, City_Name)`` key, each of which a wrong merge order
+    gets wrong:
+
+    - a DST collision (one city, two ``dt`` values whose offsets make
+      ``dt + timezone`` equal) where the earlier run's row would win
+      the tie-break;
+    - the same row in two runs, with a lesser conflicting row in the
+      later run (the DISTINCT must keep the runs apart);
+    - a NULL-``dt`` row against a NULL-``timezone`` row of the same
+      city: both have a NULL Time, and the run with a ``dt`` wins.
+    """
+    rng = random.Random(seed)
+    dts = [_T0 + 3600 * k for k in range(rng.choice([2, 3]))]
+    descs = ["rain", "mist", "clear sky", None]
+    cities = sorted(_CITIES)
+
+    def doc(name, dt, tz, temp, weather="random"):
+        d = {"name": name, "main": {"temp": temp}}
+        if dt != "missing":
+            d["dt"] = dt
+        if tz != "missing":
+            d["timezone"] = tz
+        if weather == "random":
+            u = rng.random()
+            if u < 0.1:
+                weather = []
+            elif u <= 0.9:
+                weather = [
+                    {"description": rng.choice(descs)}
+                    for _ in range(rng.randint(1, 2))
+                ]
+            else:
+                weather = None  # no weather array at all
+        if weather is not None:
+            d["weather"] = weather
+        return d
+
+    x, y, z = rng.sample(cities, 3)
+    rain = [{"description": "rain"}]
+    head = [
+        doc(x, dts[0], _CITIES[x] + 3600, 21.0, rain),
+        doc(x, dts[1], _CITIES[x], 20.0, rain),
+        doc(y, dts[0], _CITIES[y] + 3600, 30.0, rain),
+        doc(y, dts[1], _CITIES[y], 30.0, rain),
+        doc(y, dts[1], _CITIES[y], 29.0, rain),
+        doc(z, None, 0, 50.0, rain),
+        doc(z, dts[0], None, 7.0, rain),
+    ]
+    docs = [
+        doc(rng.choice(cities), "missing", 0, 6.0),
+        doc(rng.choice(cities), rng.choice(dts), "missing", 8.0),
+        doc(rng.choice(cities), rng.choice(dts), _CITIES[x], 9.0, []),
+        doc(rng.choice(cities), rng.choice(dts), _CITIES[y], 9.5, None),
+    ]
+    while len(head) + len(docs) < rng.randint(20, 38):
+        u = rng.random()
+        if u < 0.15:
+            docs.append(json.loads(json.dumps(rng.choice(docs))))  # exact dup
+            continue
+        name = rng.choice(cities)
+        dt = rng.choice(dts + [None]) if u < 0.25 else rng.choice(dts)
+        tz = None if rng.random() < 0.05 else _CITIES[name]
+        docs.append(doc(name, dt, tz, rng.choice([10.0, 10.5, 11.0, None])))
+    rng.shuffle(docs)
+    return head + docs
+
+
+def _rows(spark, table):
+    return sorted(
+        table.read(spark).collect(), key=lambda r: tuple(map(repr, r))
+    )
+
+
+@pytest.mark.parametrize("seed", range(12))
+def test_one_pass_equals_per_dt_replay(spark, tmp_path, seed):
+    """Structured Streaming's prefix-consistency rule for the backfill:
+    the one-pass load and the sequential per-``dt`` replay of the same
+    documents commit identical tables — including DST collisions, where
+    the later ``dt`` must win, NULL ``dt`` and NULL ``timezone``. Every
+    third set runs into a table that already holds rows, some of them
+    under keys the file also carries."""
+    docs = _random_docs(seed)
+    path = tmp_path / "docs.jsonl"
+    path.write_text("".join(json.dumps(d) + "\n" for d in docs))
+    want_root, got_root = str(tmp_path / "want"), str(tmp_path / "got")
+    if seed % 3 == 0:
+        prior = [dict(d, main={"temp": -1.0}) for d in docs[:6:2]]
+        prior.append(dict(DOC, name="Untouched"))
+        staged = transform_raw(make_raw(spark, prior)).distinct()
+        for root in (want_root, got_root):
+            VersionedParquetTable(root).upsert(spark, staged, keys=WEATHER_KEYS)
+    want = _rows(spark, _replay_per_dt(spark, str(path), want_root))
+    got = _rows(spark, run_batch_pipeline(spark, str(path), got_root))
+    assert got == want
+    if seed % 3 == 0:
+        assert "Untouched" in {r.City_Name for r in got}
+
+
+def test_one_pass_job_count_and_commits_independent_of_dt_count(
+    spark, tmp_path
+):
+    """The backfill is O(1) in the number of ``dt`` values: a file with
+    one distinct ``dt`` and a file with six take the same number of
+    Spark jobs, and each leaves a fresh table with exactly one commit."""
+    sc = spark.sparkContext
+    jobs, commits = [], []
+    for n_dts in (1, 6):
+        path = tmp_path / f"docs_{n_dts}.jsonl"
+        path.write_text(
+            "".join(
+                json.dumps(dict(DOC, dt=DOC["dt"] + 300 * (i % n_dts), name=c))
+                + "\n"
+                for i, c in enumerate(["A", "B", "C"] * 6)
+            )
+        )
+        root = tmp_path / f"t{n_dts}"
+        group = f"one_pass_{n_dts}_{os.getpid()}"
+        sc.setJobGroup(group, group)
+        try:
+            run_batch_pipeline(spark, str(path), str(root))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        commits.append(len((root / "_HISTORY.jsonl").read_text().splitlines()))
+    assert jobs[0] == jobs[1] and jobs[0] > 0, jobs
+    assert commits == [1, 1]
 
 
 def test_streaming_http_source_canned(spark, tmp_path):

@@ -12,6 +12,7 @@ Usage: python tools/check_parity.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 import traceback
@@ -19,7 +20,7 @@ import traceback
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from openweathermapapi_etl_spark.plans import ORACLES, QUERIES  # noqa: E402
 from openweathermapapi_etl_spark.session import get_session  # noqa: E402
