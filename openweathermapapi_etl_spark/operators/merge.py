@@ -71,6 +71,38 @@ class ConcurrentWriteError(RuntimeError):
     writer holds the commit lock). Re-read and retry the merge."""
 
 
+def _read_json(path: str) -> dict | None:
+    """The tolerant read of every optional control file (pointer,
+    layout sidecar, ``_TXN``): a missing, torn or foreign file (one
+    whose JSON is not an object) reads as ``None``, so a damaged
+    control file degrades instead of crashing the caller."""
+    try:
+        with open(path) as fh:
+            obj = json.load(fh)
+    except (OSError, ValueError):
+        return None
+    return obj if isinstance(obj, dict) else None
+
+
+def _write_json(path: str, obj: dict) -> None:
+    """Atomically replace the JSON control file ``path`` (a version,
+    branch or transaction pointer): write a sibling temp file, then
+    ``os.replace`` it over ``path`` — atomic on POSIX, so a reader sees
+    the old or the new record, never a partial one."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as fh:
+        json.dump(obj, fh)
+    os.replace(tmp, path)
+
+
+def _mark_txn_member(table_root: str) -> None:
+    """Stamp ``table_root`` as a :class:`MultiTableTxn` member (see
+    :meth:`VersionedParquetTable._txn_pinned_versions`)."""
+    marker = os.path.join(table_root, "_TXN_MEMBER")
+    if not os.path.exists(marker):
+        open(marker, "w").close()
+
+
 def _all_eq_nullsafe(pairs) -> Column:
     """AND-fold of ``eqNullSafe`` over (left, right) column pairs —
     THE null-safe equi-join condition every merge-path join builds
@@ -234,33 +266,47 @@ class VersionedParquetTable:
       POSIX), so a reader sees either the old or the new version, never
       a partial write — crash mid-write leaves the pointer untouched;
     - single-writer discipline, same as the reference (one DAG);
-    - optional hive partitioning (``partition_by``): upserts then
-      rewrite ONLY the partitions the update batch touches and
-      hard-link every untouched partition directory from the previous
-      version — merge compute and write I/O become O(touched
-      partitions), not O(table). This is the plain-parquet equivalent
-      of lakehouse file pruning and the property that makes M1 viable
-      on a 100 TB date-partitioned fact table (a micro-batch touches
-      ~1 day, not 10 years). REQUIREMENT: the partition column must be
+    - optional hive partitioning (``partition_by``). Each version
+      records the layout it was written with in its ``_LAYOUT.json``
+      sidecar, and every write takes its layout from the version it
+      reads: the constructor argument only lays out a table that has
+      no version yet. REQUIREMENT: the partition column must be
       functionally dependent on the merge keys (e.g. partition =
       date(Time) with Time in the key) and non-null — otherwise an
-      existing key in an untouched partition would escape the merge;
-    - unpartitioned upserts are FILE-pruned once the current version
-      holds at least ``_FILE_PRUNE_MIN_BYTES`` of data files: one
-      semi-join of the table's key columns and ``_metadata.file_name``
-      against the batch keys names the files holding a batch key; only
-      those are merged with the batch, and every other data file is
-      hard-linked into the new version. A 12-row tick into a 2.5M-row
-      table then writes ~12 rows instead of the whole table. Smaller
-      tables, versions with merge-on-read tombstones, and empty
-      versions take the whole-table rewrite. Side effect: every upsert
-      that adds new keys leaves one more small file, so a live table's
-      file count grows by one per tick until :meth:`compact` rewrites
-      it (compaction is not automatic).
+      existing key in an untouched partition would escape the merge.
+
+    All three upserts — :meth:`upsert`, :meth:`upsert_occ` and
+    :meth:`upsert_branch` — share ONE planner, :meth:`_stage_upsert`.
+    It merges the batch into one named base version, stages the result
+    into a claimed slot, and picks one of four outcomes:
+
+    - bootstrap: there is no base, so the slot holds the deduped batch;
+    - whole-table: the whole base is merged and rewritten. Taken for a
+      base with merge-on-read tombstones, a batch that changes a
+      column type, a base laid out unlike the current version (a
+      branch head from before a relayout of main), and an
+      unpartitioned base below ``_FILE_PRUNE_MIN_BYTES`` of data files;
+    - partition-pruned: only the partitions the batch touches are
+      merged, and every other partition dir is hard-linked from the
+      base. Merge compute and write I/O are O(touched partitions), the
+      property that makes M1 viable on a 100 TB date-partitioned fact
+      table (a micro-batch touches ~1 day, not 10 years);
+    - file-pruned: one semi-join of the table's key columns and
+      ``_metadata.file_name`` against the batch keys names the data
+      files holding a batch key; only those are merged, and every
+      other data file is hard-linked. A 12-row tick into a 2.5M-row
+      table writes ~12 rows instead of the whole table. Side effect:
+      every upsert that adds new keys leaves one more small file, so a
+      live table's file count grows by one per tick until
+      :meth:`compact` rewrites it (compaction is not automatic).
+
+    The three differ only in how they commit the slot: a pointer swing,
+    a compare-and-swap against the base, or a branch-pointer move.
     """
 
-    #: sentinel distinguishing "no sidecar on disk" from a persisted
-    #: ``None`` (an explicit unpartitioned relayout).
+    #: sentinel distinguishing "no sidecar on disk" (or, for
+    #: :meth:`_write`, "no layout given") from a persisted ``None``
+    #: (an explicit unpartitioned relayout).
     _NO_LAYOUT = object()
 
     def __init__(
@@ -270,24 +316,27 @@ class VersionedParquetTable:
         retain: int = 2,
     ) -> None:
         self.root = root
-        self.partition_by = partition_by
+        #: the layout of a table with no version yet, or of versions
+        #: written before layout sidecars existed
+        self._partition_by = partition_by
         #: retention policy: how many trailing versions survive vacuum
         #: (the Delta logRetention knob). 2 = current + predecessor;
         #: raise it to keep a deeper time-travel / change-feed window.
         self.retain = retain
         os.makedirs(root, exist_ok=True)
-        # The committed layout on disk WINS over the constructor
-        # argument: after repartition_layout() (M19), a handle opened
-        # later with the old column would otherwise run the partitioned
-        # upsert/delete link logic against dirs that no longer match
-        # f"{pcol}=" and silently drop every untouched row. Versions
-        # written before layout sidecars existed fall back to the
-        # constructor argument.
+
+    @property
+    def partition_by(self) -> str | None:
+        """The hive layout of the CURRENT version, read from disk on
+        every access. A handle never caches it: after a
+        repartition_layout() (M19) or a rollback through any handle, a
+        cached column would run the partitioned upsert/delete link
+        logic against dirs that no longer match f"{pcol}=" and
+        silently drop every untouched row."""
         cur = self.current_version()
-        if cur is not None:
-            persisted = self._persisted_layout(cur)
-            if persisted is not self._NO_LAYOUT:
-                self.partition_by = persisted
+        if cur is None:
+            return self._partition_by
+        return self._persisted_layout(cur, self._partition_by)
 
     def _layout_path(self, version: int) -> str:
         # Inside the version dir: underscore-prefixed files are
@@ -295,15 +344,13 @@ class VersionedParquetTable:
         # sidecar travels with hard-link clones for free.
         return os.path.join(self._version_dir(version), "_LAYOUT.json")
 
-    def _persisted_layout(self, version: int):
+    def _persisted_layout(self, version: int, default=_NO_LAYOUT):
         """The hive layout ``version`` was WRITTEN with, from its
-        ``_LAYOUT.json`` sidecar; ``_NO_LAYOUT`` when the version
+        ``_LAYOUT.json`` sidecar; ``default`` when the version
         predates layout metadata."""
-        try:
-            with open(self._layout_path(version)) as fh:
-                return json.load(fh)["partition_by"]
-        except (OSError, ValueError, KeyError, TypeError):
-            return self._NO_LAYOUT
+        return (_read_json(self._layout_path(version)) or {}).get(
+            "partition_by", default
+        )
 
     @property
     def _pointer(self) -> str:
@@ -311,9 +358,8 @@ class VersionedParquetTable:
 
     def current_version(self) -> int | None:
         try:
-            with open(self._pointer) as fh:
-                return int(json.load(fh)["version"])
-        except (OSError, ValueError, KeyError, TypeError):
+            return int(_read_json(self._pointer)["version"])
+        except (ValueError, KeyError, TypeError):
             return None
 
     def exists(self) -> bool:
@@ -354,15 +400,13 @@ class VersionedParquetTable:
         )
         name = os.path.basename(self.root.rstrip(os.sep))
         try:
-            with open(txn_pointer) as fh:
-                ref = json.load(fh)
-            v = ref.get("tables", {}).get(name)
+            v = (_read_json(txn_pointer) or {}).get("tables", {}).get(name)
             # int() INSIDE the try: a corrupt value ("abc", a list)
             # must degrade to "pins nothing" like every other damaged
             # control file — not crash each vacuum and audit (same
             # tolerance class as _branch_pinned_versions, r10).
             return set() if v is None else {int(v)}
-        except (OSError, ValueError, TypeError, AttributeError):
+        except (ValueError, TypeError, AttributeError):
             return set()
 
     def read(self, spark: SparkSession) -> DataFrame:
@@ -423,14 +467,14 @@ class VersionedParquetTable:
         Every INTERNAL read of a version dir must come through here
         (or :meth:`read_version`), never ``spark.read.parquet`` raw."""
         if not self._has_data_files(version):
-            try:
-                with open(self._layout_path(version)) as fh:
-                    schema_json = json.load(fh)["schema"]
-            except (OSError, ValueError, KeyError, TypeError):
+            schema_json = (_read_json(self._layout_path(version)) or {}).get(
+                "schema"
+            )
+            if schema_json is None:
                 raise FileNotFoundError(
                     f"version {version} under {self.root} has no data "
                     f"files and no schema sidecar — unreadable"
-                ) from None
+                )
             from pyspark.sql.types import StructType
 
             return spark.createDataFrame([], StructType.fromJson(schema_json))
@@ -456,8 +500,9 @@ class VersionedParquetTable:
             df = df.join(F.broadcast(tomb), on=cond, how="left_anti")
         return df
 
-    def _write(self, df: DataFrame, target: str) -> None:
-        """Write a snapshot into an EXCLUSIVELY CLAIMED (empty) version
+    def _write(self, df: DataFrame, target: str, layout=_NO_LAYOUT) -> None:
+        """Write a snapshot laid out by ``layout`` (default: the current
+        version's layout) into an EXCLUSIVELY CLAIMED (empty) version
         dir without ever deleting the claim. ``mode("overwrite")``
         removes ``target`` before recreating it, which would reopen
         the slot ``claim_version``'s mkdir just closed: a racing
@@ -477,24 +522,22 @@ class VersionedParquetTable:
         abandoned staged work."""
         import uuid
 
+        if layout is self._NO_LAYOUT:
+            layout = self.partition_by
         tmp = f"{target}.inflight-{uuid.uuid4().hex}"
         w = df.write.mode("error")
-        if self.partition_by:
-            w = w.partitionBy(self.partition_by)
+        if layout:
+            w = w.partitionBy(layout)
         w.parquet(tmp)
-        # Persist the layout this version was written with (M19): a
-        # handle opened later resolves partition_by from disk instead
-        # of trusting its constructor argument. The schema rides along
+        # Persist the layout this version was written with (M19):
+        # every handle resolves partition_by from disk instead of
+        # trusting its constructor argument. The schema rides along
         # so an ALL-ROWS-DELETED version (a partitioned write of an
         # empty frame leaves no data files at all) stays readable as
         # an empty frame instead of failing schema inference.
         with open(os.path.join(tmp, "_LAYOUT.json"), "w") as fh:
             json.dump(
-                {
-                    "partition_by": self.partition_by,
-                    "schema": df.schema.jsonValue(),
-                },
-                fh,
+                {"partition_by": layout, "schema": df.schema.jsonValue()}, fh
             )
         try:
             os.rename(tmp, target)
@@ -505,20 +548,11 @@ class VersionedParquetTable:
     def _commit(self, new_version: int) -> int:
         self._heal_history()  # back-fill a crashed predecessor's line
         now = time.time()
-        tmp = self._pointer + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"version": new_version, "committed_at": now}, fh)
-        os.replace(tmp, self._pointer)  # the atomic commit point
+        # the atomic commit point
+        _write_json(self._pointer, {"version": new_version, "committed_at": now})
         self._log_history(new_version, now)
         self._vacuum(keep=new_version)
         return new_version
-
-    def _pointer_record(self) -> dict | None:
-        try:
-            with open(self._pointer) as fh:
-                return json.load(fh)
-        except (OSError, ValueError):
-            return None
 
     def _heal_history(self) -> None:
         """Self-heal the one gap ``_commit``'s ordering leaves open: a
@@ -545,7 +579,7 @@ class VersionedParquetTable:
         final line IS the pointer's swing, so a bounded tail read
         settles it without parsing a log that grows with table age
         (a foreachBatch upsert table commits per micro-batch)."""
-        rec = self._pointer_record()
+        rec = _read_json(self._pointer)
         if rec is None or "version" not in rec:
             return
         # The back-fill and the healthy-check MUST share one default
@@ -715,9 +749,7 @@ class VersionedParquetTable:
 
     def overwrite(self, df: DataFrame) -> int:
         """Write a new version and atomically repoint ``_VERSION``."""
-        new_version = self.claim_version()
-        self._write(df, self._version_dir(new_version))
-        return self._commit(new_version)
+        return self._commit(self.stage(df))
 
     # -- M24: optimistic concurrency control ---------------------------
     #
@@ -780,38 +812,35 @@ class VersionedParquetTable:
     ) -> tuple[int, int]:
         """M24: multi-writer-safe upsert — merge against the current
         snapshot, stage into an exclusively claimed slot, CAS-commit;
-        on conflict, re-read the NEW current (which includes the
-        competing writer's rows) and redo the merge, so no commit is
-        ever lost. Returns ``(version, attempts)``.
+        on conflict, remove the slot (links included), re-read the NEW
+        current (which includes the competing writer's rows) and redo
+        the merge, so no commit is ever lost. Returns
+        ``(version, attempts)``; ``max_retries`` below 1 is a
+        ``ValueError``.
 
-        Scale: each attempt stages a full merged snapshot (the
-        simple-and-correct form; composing the CAS with the
-        partition-pruned merge path is the natural extension — claim
-        the slot, run _upsert_partitioned's link logic into it, CAS).
-        A conflict therefore costs one extra merge+write. Writers on
-        DISJOINT partitions still conflict (single pointer);
-        partition-level pointers are the classic refinement."""
+        Scale: each attempt is planned by :meth:`_stage_upsert`, the
+        planner plain upserts use, so it is partition- or file-pruned
+        like them and a conflict costs one extra PRUNED merge+write. A
+        base with merge-on-read tombstones takes the whole-table plan
+        instead of the fold plain upsert commits first: one attempt
+        adds exactly one version. Writers on DISJOINT partitions still
+        conflict (single pointer); partition-level pointers are the
+        classic refinement."""
+        if max_retries < 1:
+            raise ValueError(f"max_retries must be >= 1, got {max_retries}")
         for attempt in range(1, max_retries + 1):
             # The bootstrap (no committed version yet) goes through the
             # SAME claim+CAS path: two concurrent first writers would
             # otherwise both run overwrite() into the same v=1 dir —
             # the exact lost-update this method exists to prevent.
             base = self.current_version()
-            if base is None:
-                merged = dedup_last_write_wins(updates, keys, order_col)
-            else:
-                merged = keyed_upsert(
-                    self.read(spark), updates, keys, order_col
-                )
-            slot = self.claim_version()
-            self._write(merged, self._version_dir(slot))
+            slot = self._stage_upsert(spark, base, updates, keys, order_col)
             try:
                 return self.commit_if(slot, base), attempt
             except ConcurrentWriteError:
                 shutil.rmtree(self._version_dir(slot), ignore_errors=True)
                 if attempt == max_retries:
                     raise
-        raise AssertionError("unreachable")
 
     # -- M8: write-audit-publish -------------------------------------
     #
@@ -823,14 +852,39 @@ class VersionedParquetTable:
     # it while production readers still see the old version, and only
     # then swing the pointer — or abandon, leaving zero trace.
 
-    def stage(self, df: DataFrame) -> int:
+    def stage(self, df: DataFrame, links=()) -> int:
         """Write ``df`` as the next version directory WITHOUT
         committing the pointer. Readers are unaffected; the staged
         snapshot is a normal parquet dir that audit queries can read
         via :meth:`read_version`. Returns the staged version number
-        for :meth:`publish` / :meth:`abandon`."""
+        for :meth:`publish` / :meth:`abandon`.
+
+        ``links`` are paths inside an older version dir — hive
+        partition dirs, or data files, which bring their ``.crc``
+        siblings — to hard-link into the slot after the write, skipping
+        any name the write produced: the untouched part of every pruned
+        rewrite. Claim, private write, rename into the claim, then
+        link; a failure before the caller's commit leaves the previous
+        version current."""
         staged = self.claim_version()
-        self._write(df, self._version_dir(staged))
+        target = self._version_dir(staged)
+        self._write(df, target)
+        # The rename into the claim lands the dir even when the write
+        # emitted no data files (an all-rows-deleted partitioned write).
+        written = set(os.listdir(target))
+        for src in links:
+            src_dir, entry = os.path.split(src)
+            if entry in written:
+                continue
+            if os.path.isdir(src):
+                self._link_tree(src, os.path.join(target, entry))
+                continue
+            self._link_file(src, os.path.join(target, entry))
+            crc = f".{entry}.crc"
+            if os.path.exists(os.path.join(src_dir, crc)):
+                self._link_file(
+                    os.path.join(src_dir, crc), os.path.join(target, crc)
+                )
         return staged
 
     def publish(self, staged_version: int) -> int:
@@ -906,49 +960,27 @@ class VersionedParquetTable:
     ) -> int:
         """M1 end-to-end: merge ``updates`` into the current version and
         commit the result as a new version (idempotent — A11 fine point).
-        With ``partition_by``, only touched partitions are merged and
-        rewritten (see class docstring for the dependency requirement);
-        without it, a large table rewrites only its touched data files.
-        ``updates_key_unique``: see :func:`keyed_upsert`.
+        Planned by :meth:`_stage_upsert`: a partitioned table rewrites
+        only its touched partitions (see class docstring for the
+        dependency requirement), a large unpartitioned one only its
+        touched data files. ``updates_key_unique``: see
+        :func:`keyed_upsert`.
         """
-        if not self.exists():
-            return self.overwrite(
-                updates
-                if updates_key_unique
-                else dedup_last_write_wins(updates, keys, order_col)
-            )
         if self.partition_by:
-            # Merge-on-read tombstones must fold into the data before a
-            # partition-pruned merge: untouched partitions are
-            # hard-linked as-is, which would RESURRECT tombstoned rows
-            # the moment the new version commits without its
-            # predecessor's side file. One compaction, then prune.
-            if os.path.isdir(self._deletes_dir(self.current_version())):
-                self.apply_deletes(spark)
-            return self._upsert_partitioned(
-                spark, updates, keys, order_col, updates_key_unique
+            # Fold merge-on-read tombstones into the data first (one
+            # partition-pruned compaction), so the merge itself can
+            # still prune: a tombstoned base takes the whole-table plan.
+            self.apply_deletes(spark)
+        return self._commit(
+            self._stage_upsert(
+                spark,
+                self.current_version(),
+                updates,
+                keys,
+                order_col,
+                updates_key_unique,
             )
-        cur = self.current_version()
-        files = self._data_file_sizes(cur)
-        if (
-            files
-            and sum(files.values()) >= _FILE_PRUNE_MIN_BYTES
-            # Linking files past merge-on-read tombstones would
-            # resurrect the rows they deleted (the new version does not
-            # carry its predecessor's side file).
-            and not os.path.isdir(self._deletes_dir(cur))
-        ):
-            return self._upsert_file_pruned(
-                spark, updates, keys, order_col, updates_key_unique, files
-            )
-        merged = keyed_upsert(
-            self.read(spark),
-            updates,
-            keys,
-            order_col,
-            updates_key_unique=updates_key_unique,
         )
-        return self.overwrite(merged)
 
     def upsert_changed_only(
         self,
@@ -1006,106 +1038,83 @@ class VersionedParquetTable:
             spark, changed, keys, order_col, updates_key_unique=True
         )
 
-    def _upsert_partitioned(
+    def _stage_upsert(
         self,
         spark: SparkSession,
+        base: int | None,
         updates: DataFrame,
         keys: list[str],
         order_col: str | None,
         updates_key_unique: bool = False,
     ) -> int:
-        """Partition-pruned merge: anti-join only within touched
-        partitions; untouched partition dirs are hard-linked from the
-        previous version (same filesystem, so links are free and the
-        old version stays readable until vacuum — inode refcounts keep
-        the data alive either way)."""
-        pcol = self.partition_by
-        old_dir = self._version_dir(self.current_version())
-        old = self.read(spark)
-        widened = self._overwrite_if_widened(
-            old, updates, keys, order_col, updates_key_unique
-        )
-        if widened is not None:
-            return widened
-        # Touched partition values: bounded by design (a micro-batch
-        # touches few partitions), so driver-side collect is safe.
-        touched = [r[0] for r in updates.select(pcol).distinct().collect()]
-        merged = keyed_upsert(
-            old.filter(_null_safe_isin(F.col(pcol), touched)),
-            updates,
-            keys,
-            order_col,
-            updates_key_unique=updates_key_unique,
-        )
-        return self._write_linked(
-            merged, old_dir, lambda e: e.startswith(f"{pcol}=")
-        )
+        """THE upsert planner (class docstring): merge ``updates`` into
+        version ``base`` and stage the result into a claimed slot,
+        uncommitted; returns the slot. The caller commits it.
 
-    def _upsert_file_pruned(
-        self,
-        spark: SparkSession,
-        updates: DataFrame,
-        keys: list[str],
-        order_col: str | None,
-        updates_key_unique: bool,
-        files: dict[str, int],
-    ) -> int:
-        """File-pruned merge for an unpartitioned table (class
-        docstring): merge the data files holding a batch key with the
-        batch, hard-link the other ``files`` of the current version.
-        Caller guarantees data files and no tombstone side file."""
-        old_dir = self._version_dir(self.current_version())
-        old = spark.read.parquet(old_dir)
-        widened = self._overwrite_if_widened(
-            old, updates, keys, order_col, updates_key_unique
-        )
-        if widened is not None:
-            return widened
+        The data, the tombstones and the layout all come from ``base``
+        itself, never from a value a handle cached. The pruned outcomes
+        need the base laid out as this write will be (a branch head can
+        predate a relayout of main), no merge-on-read tombstones
+        (linking files past them would resurrect the rows they delete),
+        and a batch that changes no column type (linked files would keep
+        the old type, which the parquet reader rejects). The type check
+        compares analysed schemas only, no Spark job."""
+        if base is None:
+            return self.stage(
+                updates
+                if updates_key_unique
+                else dedup_last_write_wins(updates, keys, order_col)
+            )
+        old = self.read_version(spark, base)
+        layout = self._persisted_layout(base, self._partition_by)
+        files = {} if layout else self._data_file_sizes(base)
+
+        def merge(frame: DataFrame) -> DataFrame:
+            return keyed_upsert(
+                frame,
+                updates,
+                keys,
+                order_col,
+                updates_key_unique=updates_key_unique,
+            )
+
+        whole = merge(old)
+        if (
+            os.path.isdir(self._deletes_dir(base))
+            or layout != self.partition_by
+            or [f.dataType.simpleString() for f in whole.schema]
+            != [f.dataType.simpleString() for f in old.schema]
+            or not (layout or (files and sum(files.values()) >= _FILE_PRUNE_MIN_BYTES))
+        ):
+            return self.stage(whole)
+        base_dir = self._version_dir(base)
+        if layout:
+            # Touched partition values: bounded by design (a micro-batch
+            # touches few partitions), so collecting them is safe.
+            values = [r[0] for r in updates.select(layout).distinct().collect()]
+            return self.stage(
+                merge(old.filter(_null_safe_isin(F.col(layout), values))),
+                [
+                    os.path.join(base_dir, e)
+                    for e in os.listdir(base_dir)
+                    if e.startswith(f"{layout}=")
+                ],
+            )
         touched = {r[0] for r in self._key_files(old, updates, keys).collect()}
         # No file touched (every key is new): the merge is the batch
         # alone. ``limit(0)`` keeps the empty side a plan over the table,
         # not a Python RDD of unknown size.
         touched_old = (
             spark.read.schema(old.schema).parquet(
-                *(os.path.join(old_dir, f) for f in sorted(touched))
+                *(os.path.join(base_dir, f) for f in sorted(touched))
             )
             if touched
             else old.limit(0)
         )
-        merged = keyed_upsert(
-            touched_old,
-            updates,
-            keys,
-            order_col,
-            updates_key_unique=updates_key_unique,
+        return self.stage(
+            merge(touched_old),
+            [os.path.join(base_dir, f) for f in files if f not in touched],
         )
-        return self._write_linked(
-            merged, old_dir, lambda e: e in files and e not in touched
-        )
-
-    def _overwrite_if_widened(
-        self,
-        old: DataFrame,
-        updates: DataFrame,
-        keys: list[str],
-        order_col: str | None,
-        updates_key_unique: bool,
-    ) -> int | None:
-        """The type guard of both pruned upserts. They link the current
-        version's untouched partitions or files into the new one, so a
-        batch that widens a column type would leave files of two types
-        in one version, which the parquet reader rejects. When the
-        whole-table merge changes a column type of ``old``, commit it as
-        a full rewrite and return the new version; otherwise return None
-        (planning only, no Spark job)."""
-        whole = keyed_upsert(
-            old, updates, keys, order_col, updates_key_unique=updates_key_unique
-        )
-        if [f.dataType.simpleString() for f in whole.schema] == [
-            f.dataType.simpleString() for f in old.schema
-        ]:
-            return None
-        return self.overwrite(whole)
 
     @staticmethod
     def _key_files(old: DataFrame, updates: DataFrame, keys: list[str]) -> DataFrame:
@@ -1128,34 +1137,6 @@ class VersionedParquetTable:
                 for e in it
                 if e.is_file() and e.name.endswith(".parquet")
             }
-
-    def _write_linked(self, merged: DataFrame, old_dir: str, keep) -> int:
-        """The link-then-commit step of every pruned rewrite: claim the
-        next version, write ``merged`` into it, hard-link each entry of
-        ``old_dir`` that ``keep`` selects and the write did not produce
-        (hive partition dirs, or data files with their ``.crc``
-        siblings), then swing the pointer. A failure before the swing
-        leaves the previous version current and unchanged."""
-        new_version = self.claim_version()
-        target = self._version_dir(new_version)
-        self._write(merged, target)
-        # The rename into the claim lands the dir even when the write
-        # emitted no data files (an all-rows-deleted partitioned write).
-        written = set(os.listdir(target))
-        for entry in os.listdir(old_dir):
-            if entry in written or not keep(entry):
-                continue
-            src, dst = os.path.join(old_dir, entry), os.path.join(target, entry)
-            if os.path.isdir(src):
-                self._link_tree(src, dst)
-                continue
-            self._link_file(src, dst)
-            crc = f".{entry}.crc"
-            if os.path.exists(os.path.join(old_dir, crc)):
-                self._link_file(
-                    os.path.join(old_dir, crc), os.path.join(target, crc)
-                )
-        return self._commit(new_version)
 
     def delete(
         self,
@@ -1203,13 +1184,12 @@ class VersionedParquetTable:
         # merge-on-read side file, so pending tombstones would be
         # resurrected the moment the new version commits. Fold them
         # into the data first (itself partition-pruned), then prune.
-        if os.path.isdir(self._deletes_dir(self.current_version())):
-            self.apply_deletes(spark)
-            # The fold may have emptied the table (tombstones covered
-            # every remaining row): no-op here too, or the core would
-            # commit a second, content-identical empty version.
-            if not self._has_data_files(self.current_version()):
-                return self.current_version()
+        # The fold may have emptied the table (tombstones covered every
+        # remaining row): no-op here too, or the core would commit a
+        # second, content-identical empty version.
+        cur = self.apply_deletes(spark)
+        if not self._has_data_files(cur):
+            return cur
         return self._delete_partitioned_core(spark, dk, keys)
 
     @staticmethod
@@ -1260,11 +1240,12 @@ class VersionedParquetTable:
             F.broadcast(dk2), on=cond(kept), how="left_anti"
         )
         skip = self._entries_for_values(old_dir, pcol, touched)
-        return self._write_linked(
-            remaining,
-            old_dir,
-            lambda e: e.startswith(f"{pcol}=") and e not in skip,
-        )
+        links = [
+            os.path.join(old_dir, e)
+            for e in os.listdir(old_dir)
+            if e.startswith(f"{pcol}=") and e not in skip
+        ]
+        return self._commit(self.stage(remaining, links))
 
     def drop_partitions(self, spark: SparkSession, values: list) -> int:
         """M27: PARTITION EXPIRY — drop whole hive partitions (a TTL /
@@ -1283,8 +1264,7 @@ class VersionedParquetTable:
         result rather than an error (idempotent re-runs)."""
         if not self.partition_by:
             raise ValueError("drop_partitions requires a partitioned table")
-        if os.path.isdir(self._deletes_dir(self.current_version())):
-            self.apply_deletes(spark)
+        self.apply_deletes(spark)
         pcol = self.partition_by
         old_dir = self._version_dir(self.current_version())
         drop = self._entries_for_values(old_dir, pcol, values)
@@ -1533,10 +1513,7 @@ class VersionedParquetTable:
         ptr = self._branch_pointer(name)
         if os.path.exists(ptr):
             raise FileExistsError(f"branch exists: {name}")
-        tmp = ptr + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"head": base, "base": base}, fh)
-        os.replace(tmp, ptr)
+        _write_json(ptr, {"head": base, "base": base})
         return base
 
     def read_branch(self, spark: SparkSession, name: str) -> DataFrame:
@@ -1545,19 +1522,20 @@ class VersionedParquetTable:
     def write_branch(self, name: str, df: DataFrame) -> int:
         """Commit ``df`` as the branch's new head. Main is untouched."""
         ref = self._branch_ref(name)
-        new_version = self.claim_version()
-        self._write(df, self._version_dir(new_version))
-        tmp = self._branch_pointer(name) + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"head": new_version, "base": ref["base"]}, fh)
-        os.replace(tmp, self._branch_pointer(name))
-        return new_version
+        head = self.stage(df)
+        _write_json(self._branch_pointer(name), {"head": head, "base": ref["base"]})
+        return head
 
     def upsert_branch(
         self, spark: SparkSession, name: str, updates: DataFrame, keys: list[str]
     ) -> int:
-        merged = keyed_upsert(self.read_branch(spark, name), updates, keys)
-        return self.write_branch(name, merged)
+        """Upsert into the branch head, planned like a main-line upsert
+        (:meth:`_stage_upsert` with the head as base), and commit the
+        slot as the branch's new head. Main is untouched."""
+        ref = self._branch_ref(name)
+        head = self._stage_upsert(spark, ref["head"], updates, keys, None)
+        _write_json(self._branch_pointer(name), {"head": head, "base": ref["base"]})
+        return head
 
     def merge_branch(self, name: str) -> int:
         """Fast-forward main to the branch head and delete the branch.
@@ -1638,20 +1616,13 @@ class VersionedParquetTable:
         # rollback look like a crashed (unlogged) swing to the next
         # commit and back-fill a near-duplicate line.
         now = time.time()
-        tmp = self._pointer + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"version": to_version, "committed_at": now}, fh)
-        os.replace(tmp, self._pointer)
+        _write_json(self._pointer, {"version": to_version, "committed_at": now})
         # The restore is itself a pointer swing: log it so
         # AS-OF-TIMESTAMP reads after the restore resolve to the
-        # restored version, not the rolled-back one.
+        # restored version, not the rolled-back one. Later writes take
+        # the restored version's layout, which may predate a
+        # partition-evolution boundary (M19), from its sidecar.
         self._log_history(to_version, now)
-        # A rollback may cross a partition-evolution boundary (M19):
-        # re-resolve this handle's layout from the restored version so
-        # subsequent partitioned writes match the restored dirs.
-        persisted = self._persisted_layout(to_version)
-        if persisted is not self._NO_LAYOUT:
-            self.partition_by = persisted
         return to_version
 
     # -- M21: merge-on-read deletes ------------------------------------
@@ -1737,12 +1708,13 @@ class VersionedParquetTable:
         Cost is one full rewrite of current data — schedule with
         compaction (M5); the layout metadata itself is free. The new
         layout is persisted in the version's ``_LAYOUT.json`` sidecar,
-        so handles opened later resolve it from disk — a stale
-        constructor argument cannot desync writes from the dirs on
-        disk."""
+        so every handle, including one opened before the relayout,
+        resolves it from disk — a stale constructor argument cannot
+        desync writes from the dirs on disk."""
         current = self.read(spark)
-        self.partition_by = new_partition_by
-        return self.overwrite(current)
+        slot = self.claim_version()
+        self._write(current, self._version_dir(slot), new_partition_by)
+        return self._commit(slot)
 
     # -- M17: shallow clone --------------------------------------------
 
@@ -2092,10 +2064,7 @@ class MultiTableTxn:
                 except (TypeError, ValueError):
                     continue
                 if os.path.isdir(vdir):
-                    marker = os.path.join(troot, "_TXN_MEMBER")
-                    if not os.path.exists(marker):
-                        with open(marker, "w") as fh:
-                            fh.write("")
+                    _mark_txn_member(troot)
 
     def table(self, name: str) -> VersionedParquetTable:
         if not name.isidentifier():
@@ -2108,10 +2077,7 @@ class MultiTableTxn:
             # that carry this marker, so a standalone table sharing
             # the parent dir with an unrelated or stale _TXN file
             # can't have its versions misclassified as txn-committed.
-            marker = os.path.join(tbl.root, "_TXN_MEMBER")
-            if not os.path.exists(marker):
-                with open(marker, "w") as fh:
-                    fh.write("")
+            _mark_txn_member(tbl.root)
             self._tables[name] = tbl
         return self._tables[name]
 
@@ -2143,10 +2109,7 @@ class MultiTableTxn:
                 )
             tables[name] = version
         new = {"txn": cur["txn"] + 1, "tables": tables}
-        tmp = self._pointer + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(new, fh)
-        os.replace(tmp, self._pointer)  # the single atomic commit point
+        _write_json(self._pointer, new)  # the single atomic commit point
         return new["txn"]
 
     def read(self, spark: SparkSession, name: str) -> DataFrame:

@@ -178,6 +178,32 @@ def test_package_reads_only_known_env_vars():
     }
 
 
+def test_merge_replaces_control_files_in_one_function():
+    """``operators/merge.py`` swings every JSON control file (version,
+    branch and transaction pointers) through one atomic-JSON helper, so
+    ``os.replace`` is called in exactly one function. A second
+    tmp-file + ``os.replace`` copy fails here."""
+    import ast
+
+    path = os.path.join(REPO, "openweathermapapi_etl_spark", "operators", "merge.py")
+    with open(path) as fh:
+        tree = ast.parse(fh.read())
+
+    def replaces(node):
+        return [
+            n
+            for n in ast.walk(node)
+            if isinstance(n, ast.Call) and ast.unparse(n.func) == "os.replace"
+        ]
+
+    callers = [
+        fn.name
+        for fn in ast.walk(tree)
+        if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)) and replaces(fn)
+    ]
+    assert callers == ["_write_json"] and len(replaces(tree)) == 1
+
+
 # Root-level docs that describe the current tree; the other root docs are
 # history and reference notes that name deleted files on purpose.
 _CURRENT_DOCS = {

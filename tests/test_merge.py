@@ -2714,3 +2714,179 @@ def test_file_pruned_upsert_after_mor_delete_keeps_rows_deleted(
     got = _wx_rows(table, spark)
     assert (_t(2), "A", 2.0) not in got and (_t(9), "B", 9.0) in got
     assert len(got) == len(SEED)
+
+
+# -- layout from the base version; one planner for plain, OCC and branch -----
+
+
+def _layout_on_disk(table):
+    """(hive partition dirs, sidecar layout) of the current version."""
+    v = table.current_version()
+    d = table._version_dir(v)
+    return sorted(e for e in os.listdir(d) if "=" in e), table._persisted_layout(v)
+
+
+def _seed_three(spark, root, partition_by):
+    table = VersionedParquetTable(root, partition_by=partition_by)
+    table.overwrite(make_df(spark, [("k1", 0, "p0"), ("k2", 0, "p1"), ("k3", 0, "p2")]))
+    return table
+
+
+def test_stale_handle_writes_take_layout_from_current_version(spark, tmp_path):
+    """A handle opened before another handle relayouted the table must
+    write in the relayouted layout. A cached ``partition_by`` made a
+    stale partitioned handle link only ``val=`` dirs into an upsert
+    (none exist after the relayout, so k2 and k3 vanished), empty the
+    table on a delete, and a stale flat handle rewrite a partitioned
+    table flat."""
+    flat_rows = {("k1", 0, "p0"), ("k2", 0, "p1"), ("k3", 0, "p2")}
+
+    a = _seed_three(spark, str(tmp_path / "up"), "val")
+    VersionedParquetTable(a.root).repartition_layout(spark, None)
+    a.upsert(spark, make_df(spark, [("k1", 1, "p0")]), keys=["k"])
+    assert _rows(a.read(spark).select("k", "ord", "val")) == (
+        flat_rows - {("k1", 0, "p0")} | {("k1", 1, "p0")}
+    )
+    assert _layout_on_disk(a) == ([], None)
+
+    d = _seed_three(spark, str(tmp_path / "del"), "val")
+    VersionedParquetTable(d.root).repartition_layout(spark, None)
+    d.delete(spark, spark.createDataFrame([("k1",)], "k string"), keys=["k"])
+    assert _rows(d.read(spark).select("k", "ord", "val")) == flat_rows - {
+        ("k1", 0, "p0")
+    }
+    assert _layout_on_disk(d) == ([], None)
+
+    f = _seed_three(spark, str(tmp_path / "rev"), None)
+    VersionedParquetTable(f.root).repartition_layout(spark, "val")
+    f.upsert(spark, make_df(spark, [("k1", 1, "p0")]), keys=["k"])
+    assert _rows(f.read(spark).select("k", "ord", "val")) == (
+        flat_rows - {("k1", 0, "p0")} | {("k1", 1, "p0")}
+    )
+    assert _layout_on_disk(f) == (["val=p0", "val=p1", "val=p2"], "val")
+
+
+_PLANNER_SEED = [(k, 0, f"p{i % 3}") for i, k in enumerate("abcdefgh")]
+# Touches partition p1 only: b (existing) and x (new) both map to p1.
+_PLANNER_BATCH = [("b", 5, "p1"), ("x", 1, "p1")]
+
+
+def _data_inodes(table, version):
+    d = table._version_dir(version)
+    return {
+        os.path.relpath(os.path.join(dp, fn), d): os.stat(os.path.join(dp, fn)).st_ino
+        for dp, _dirs, fns in os.walk(d)
+        for fn in fns
+        if fn.endswith(".parquet")
+    }
+
+
+def _linked_from(table, base, new):
+    """Data files of version ``new`` that share an inode with the same
+    path in version ``base`` (hard-linked, not rewritten)."""
+    old = _data_inodes(table, base)
+    return {p for p, ino in _data_inodes(table, new).items() if old.get(p) == ino}
+
+
+@pytest.mark.parametrize("partition_by", [None, "val"])
+def test_occ_and_branch_upserts_prune_like_plain_upsert(
+    spark, tmp_path, file_pruned, partition_by
+):
+    """``upsert``, ``upsert_occ`` and ``upsert_branch`` share one planner:
+    on the same seed and batch each hard-links the untouched data files
+    (unpartitioned) or partitions (``partition_by``) of its base and
+    gives the same rows."""
+    got = {}
+    for mode in ("plain", "occ", "branch"):
+        table = VersionedParquetTable(str(tmp_path / mode), partition_by=partition_by)
+        base = table.overwrite(make_df(spark, _PLANNER_SEED).repartition(4))
+        batch = make_df(spark, _PLANNER_BATCH)
+        if mode == "plain":
+            new = table.upsert(spark, batch, keys=["k"])
+            out = table.read(spark)
+        elif mode == "occ":
+            new, attempts = table.upsert_occ(spark, batch, keys=["k"])
+            assert attempts == 1
+            out = table.read(spark)
+        else:
+            table.create_branch("exp")
+            new = table.upsert_branch(spark, "exp", batch, keys=["k"])
+            assert table.current_version() == base  # main untouched
+            out = table.read_branch(spark, "exp")
+        got[mode] = _rows(out.select("k", "ord", "val"))
+        base_files = set(_data_inodes(table, base))
+        linked = _linked_from(table, base, new)
+        if partition_by:
+            assert linked == {p for p in base_files if not p.startswith("val=p1")}
+            assert linked, mode
+        else:
+            assert linked and linked < base_files, mode
+    assert got["plain"] == got["occ"] == got["branch"] == (
+        {r for r in _PLANNER_SEED if r[0] != "b"} | set(_PLANNER_BATCH)
+    )
+
+
+def test_occ_cas_loser_slot_and_links_removed_then_retry_lands_both(
+    spark, tmp_path, file_pruned, monkeypatch
+):
+    """A competitor commits between an OCC attempt's pruned staging and
+    its compare-and-swap: the losing slot, hard links included, is
+    removed, and the retry merges against the competitor's version so
+    both writers' rows land."""
+    from openweathermapapi_etl_spark.operators.merge import version_states
+
+    writer = VersionedParquetTable(str(tmp_path / "t"))
+    writer.overwrite(make_df(spark, _PLANNER_SEED).repartition(4))
+    competitor = VersionedParquetTable(writer.root)
+    orig = VersionedParquetTable._stage_upsert
+    lost: list[tuple[int, set]] = []
+
+    def racing(self, spark_, base, *args, **kw):
+        slot = orig(self, spark_, base, *args, **kw)
+        if self is writer and not lost:
+            lost.append((slot, _linked_from(self, base, slot)))
+            competitor.upsert(spark, make_df(spark, [("c", 7, "C")]), keys=["k"])
+        return slot
+
+    monkeypatch.setattr(VersionedParquetTable, "_stage_upsert", racing)
+    v, attempts = writer.upsert_occ(spark, make_df(spark, [("a", 9, "W")]), keys=["k"])
+    assert attempts == 2
+    loser, loser_links = lost[0]
+    assert loser_links  # the losing attempt was pruned: it held links
+    assert not os.path.exists(writer._version_dir(loser))
+    assert loser not in dict(version_states(writer))
+    assert not writer.inflight_dirs()
+    want = {r for r in _PLANNER_SEED if r[0] not in "ac"} | {("a", 9, "W"), ("c", 7, "C")}
+    assert _rows(writer.read(spark)) == want and v == writer.current_version()
+
+
+def test_occ_on_tombstoned_partitioned_base_commits_one_version(spark, tmp_path):
+    """``upsert_occ`` on a partitioned base with merge-on-read tombstones
+    takes the whole-table plan instead of plain upsert's fold: each
+    successful attempt appends exactly one ``_HISTORY.jsonl`` line, and
+    the deleted rows stay deleted."""
+    table = VersionedParquetTable(str(tmp_path / "t"), partition_by="val")
+    table.overwrite(make_df(spark, _PLANNER_SEED))
+    table.delete_mor(spark, spark.createDataFrame([("a",), ("e",)], "k string"), ["k"])
+    hist = os.path.join(table.root, "_HISTORY.jsonl")
+    for i, batch in enumerate(([("b", 5, "p1")], [("c", 6, "p2"), ("y", 1, "p0")])):
+        lines = len(open(hist).readlines())
+        v, attempts = table.upsert_occ(spark, make_df(spark, batch), keys=["k"])
+        assert attempts == 1 and len(open(hist).readlines()) == lines + 1, i
+        assert not os.path.isdir(table._deletes_dir(v))
+    want = {r for r in _PLANNER_SEED if r[0] not in "abce"} | {
+        ("b", 5, "p1"),
+        ("c", 6, "p2"),
+        ("y", 1, "p0"),
+    }
+    assert _rows(table.read(spark).select("k", "ord", "val")) == want
+
+
+def test_upsert_occ_rejects_zero_retries(spark, tmp_path):
+    """``max_retries=0`` allows no attempt: a ``ValueError`` before any
+    slot is claimed."""
+    table = VersionedParquetTable(str(tmp_path / "t"))
+    table.overwrite(make_df(spark, [("a", 1, "x")]))
+    with pytest.raises(ValueError, match="max_retries"):
+        table.upsert_occ(spark, make_df(spark, [("a", 2, "y")]), keys=["k"], max_retries=0)
+    assert table.versions() == [1]
