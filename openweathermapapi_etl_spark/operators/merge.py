@@ -55,6 +55,16 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ByteType,
+    DateType,
+    IntegerType,
+    LongType,
+    ShortType,
+    StringType,
+    StructType,
+    TimestampType,
+)
 
 #: Data-file bytes of the current version from which an unpartitioned
 #: upsert rewrites only the files holding a batch key. Below it the
@@ -63,6 +73,20 @@ from pyspark.sql import functions as F
 #: 0.75 vs 0.70 s at 2.0 MB, 0.81 vs 0.85 s at 2.7 MB, 0.73 vs 1.05 s
 #: at 3.6 MB, 0.89 vs 1.50 s at 14 MB.
 _FILE_PRUNE_MIN_BYTES = 3 * 1024 * 1024
+
+#: Key types whose collected Python value rebuilds an equal literal: the
+#: file-pruned key scan range-filters on these, and on timestamps, which
+#: travel as micros. Floats (NaN, -0.0), NTZ timestamps (a naive
+#: ``datetime`` literal goes through the local zone) and nested types
+#: are scanned unfiltered.
+_EXACT_LITERAL_TYPES = (
+    StringType(),
+    DateType(),
+    ByteType(),
+    ShortType(),
+    IntegerType(),
+    LongType(),
+)
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -465,20 +489,30 @@ class VersionedParquetTable:
         again). The ``_LAYOUT.json`` sidecar recorded the schema at
         write time — an empty table is a normal state, not an error.
         Every INTERNAL read of a version dir must come through here
-        (or :meth:`read_version`), never ``spark.read.parquet`` raw."""
+        (or :meth:`read_version`), never ``spark.read.parquet`` raw.
+
+        A version with data files is read through the same sidecar
+        schema, so no read pays Parquet's schema-inference job; only a
+        version written before sidecars held a schema is inferred. The
+        hive partition column is left out of the given schema, so Spark
+        still appends it last with the type it infers from the dir
+        names — the frame inference gives."""
+        sidecar = _read_json(self._layout_path(version)) or {}
+        schema_json = sidecar.get("schema")
         if not self._has_data_files(version):
-            schema_json = (_read_json(self._layout_path(version)) or {}).get(
-                "schema"
-            )
             if schema_json is None:
                 raise FileNotFoundError(
                     f"version {version} under {self.root} has no data "
                     f"files and no schema sidecar — unreadable"
                 )
-            from pyspark.sql.types import StructType
-
             return spark.createDataFrame([], StructType.fromJson(schema_json))
-        return spark.read.parquet(self._version_dir(version))
+        if schema_json is None:
+            return spark.read.parquet(self._version_dir(version))
+        layout = sidecar.get("partition_by")
+        schema = StructType(
+            [f for f in StructType.fromJson(schema_json) if f.name != layout]
+        )
+        return spark.read.schema(schema).parquet(self._version_dir(version))
 
     def read_version(self, spark: SparkSession, version: int) -> DataFrame:
         """M7 — time-travel read: the table AS OF ``version``. Reads the
@@ -525,7 +559,9 @@ class VersionedParquetTable:
         if layout is self._NO_LAYOUT:
             layout = self.partition_by
         tmp = f"{target}.inflight-{uuid.uuid4().hex}"
-        w = df.write.mode("error")
+        # zstd, not the snappy default: with INT64 timestamps it writes
+        # the weather table ~16% smaller than snappy with INT96 did.
+        w = df.write.mode("error").option("compression", "zstd")
         if layout:
             w = w.partitionBy(layout)
         w.parquet(tmp)
@@ -865,26 +901,33 @@ class VersionedParquetTable:
         any name the write produced: the untouched part of every pruned
         rewrite. Claim, private write, rename into the claim, then
         link; a failure before the caller's commit leaves the previous
-        version current."""
+        version current. A failed write or link removes the slot and
+        its ``.inflight-*`` dirs before re-raising: the writer knows the
+        slot is dead, and left on disk it would read as an
+        ``unlogged-orphan`` that vacuum never reclaims."""
         staged = self.claim_version()
         target = self._version_dir(staged)
-        self._write(df, target)
-        # The rename into the claim lands the dir even when the write
-        # emitted no data files (an all-rows-deleted partitioned write).
-        written = set(os.listdir(target))
-        for src in links:
-            src_dir, entry = os.path.split(src)
-            if entry in written:
-                continue
-            if os.path.isdir(src):
-                self._link_tree(src, os.path.join(target, entry))
-                continue
-            self._link_file(src, os.path.join(target, entry))
-            crc = f".{entry}.crc"
-            if os.path.exists(os.path.join(src_dir, crc)):
-                self._link_file(
-                    os.path.join(src_dir, crc), os.path.join(target, crc)
-                )
+        try:
+            self._write(df, target)
+            # The rename into the claim lands the dir even when the write
+            # emitted no data files (an all-rows-deleted partitioned write).
+            written = set(os.listdir(target))
+            for src in links:
+                src_dir, entry = os.path.split(src)
+                if entry in written:
+                    continue
+                if os.path.isdir(src):
+                    self._link_tree(src, os.path.join(target, entry))
+                    continue
+                self._link_file(src, os.path.join(target, entry))
+                crc = f".{entry}.crc"
+                if os.path.exists(os.path.join(src_dir, crc)):
+                    self._link_file(
+                        os.path.join(src_dir, crc), os.path.join(target, crc)
+                    )
+        except BaseException:
+            self.abandon(staged)
+            raise
         return staged
 
     def publish(self, staged_version: int) -> int:
@@ -1078,15 +1121,24 @@ class VersionedParquetTable:
                 updates_key_unique=updates_key_unique,
             )
 
-        whole = merge(old)
+        def widens() -> bool:
+            # The union can only change a type some batch column
+            # brings, so the whole-table merge is planned (py4j work on
+            # every tick) only when a batch column's type differs.
+            types = {f.name: f.dataType for f in old.schema}
+            if all(types.get(f.name, f.dataType) == f.dataType for f in updates.schema):
+                return False
+            return [f.dataType.simpleString() for f in merge(old).schema] != [
+                t.simpleString() for t in types.values()
+            ]
+
         if (
             os.path.isdir(self._deletes_dir(base))
             or layout != self.partition_by
-            or [f.dataType.simpleString() for f in whole.schema]
-            != [f.dataType.simpleString() for f in old.schema]
             or not (layout or (files and sum(files.values()) >= _FILE_PRUNE_MIN_BYTES))
+            or widens()
         ):
-            return self.stage(whole)
+            return self.stage(merge(old))
         base_dir = self._version_dir(base)
         if layout:
             # Touched partition values: bounded by design (a micro-batch
@@ -1122,7 +1174,34 @@ class VersionedParquetTable:
         ``updates``: one NULL-safe semi-join of the table's key columns
         and ``_metadata.file_name`` against the batch keys. ``old`` is
         key-unique, so the result has at most one row per batch key and
-        needs no DISTINCT (whose exchange would sit above the scan)."""
+        needs no DISTINCT (whose exchange would sit above the scan).
+
+        The scan is first filtered to the batch's ``[min, max]`` of the
+        first key (plus its NULL group), found in one aggregate job.
+        Parquet pushdown then skips every row group and page whose
+        min/max statistics miss that range: table files are sorted by
+        key inside (the dedup window sorts them), so a 12-key tick
+        decodes a few pages of a 2.5M-row table instead of all of it.
+        Timestamp bounds travel as ``unix_micros`` longs: a Python
+        ``datetime`` goes through the driver's local zone, and in a DST
+        fall-back hour the bound would move by an hour, miss the file
+        holding the key and duplicate it. A first key of another type
+        is filtered only if its Python value round-trips exactly."""
+        k0 = F.col(keys[0])
+        dtype = updates.schema[keys[0]].dataType
+        ts = isinstance(dtype, TimestampType)
+        if ts or dtype in _EXACT_LITERAL_TYPES:
+            lo, hi, has_null = updates.agg(
+                F.min(F.unix_micros(k0) if ts else k0),
+                F.max(F.unix_micros(k0) if ts else k0),
+                F.max(k0.isNull()),
+            ).first()
+
+            def bound(v) -> Column:
+                return F.timestamp_micros(F.lit(v)) if ts else F.lit(v).cast(dtype)
+
+            cond = F.lit(False) if lo is None else k0.between(bound(lo), bound(hi))
+            old = old.filter((cond | k0.isNull()) if has_null else cond)
         bk = updates.select(*[F.col(k).alias(f"__bk_{k}") for k in keys])
         scan = old.select(*keys, F.col("_metadata.file_name").alias("__file"))
         cond = _all_eq_nullsafe((scan[k], bk[f"__bk_{k}"]) for k in keys)

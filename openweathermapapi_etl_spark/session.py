@@ -46,6 +46,12 @@ RUNTIME_CONFS: dict[str, str] = {
     # catalog (floor to microseconds — matches the DuckDB oracle's
     # date_trunc('microseconds', ts)).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # Write TimestampType as INT64 micros, not the INT96 default: INT96
+    # columns carry no Parquet min/max statistics or page index and
+    # never receive a pushed filter, so a Time-range scan of a table
+    # decodes every page. Micros is Spark's own precision, so values
+    # are unchanged.
+    "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
 }
 
 

@@ -5,6 +5,7 @@ version swap."""
 from __future__ import annotations
 
 import datetime
+import json
 import os
 
 import pytest
@@ -2890,3 +2891,189 @@ def test_upsert_occ_rejects_zero_retries(spark, tmp_path):
     with pytest.raises(ValueError, match="max_retries"):
         table.upsert_occ(spark, make_df(spark, [("a", 2, "y")]), keys=["k"], max_retries=0)
     assert table.versions() == [1]
+
+
+# -- key scan filtered by Parquet statistics; reads through the sidecar ------
+
+
+@pytest.fixture
+def amsterdam_local_zone():
+    """The driver's local zone is Europe/Amsterdam (Python only: the
+    session zone stays UTC), restored afterwards."""
+    import time
+
+    prev = os.environ.get("TZ")
+    os.environ["TZ"] = "Europe/Amsterdam"
+    time.tzset()
+    try:
+        yield
+    finally:
+        if prev is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = prev
+        time.tzset()
+
+
+def test_file_pruned_upsert_in_dst_fallback_hour_keeps_one_row(
+    spark, tmp_path, file_pruned, amsterdam_local_zone
+):
+    """2023-10-29 00:30 UTC is 02:30 CEST, a wall-clock hour Amsterdam
+    lives twice. A key-scan bound collected as a Python ``datetime``
+    and turned back into a literal goes through that zone and can move
+    by an hour, so the scan misses the file holding the key and the
+    upsert duplicates it. Bounds carried as micros keep one row. Rows
+    are built and checked with SQL literals, never Python datetimes."""
+    table = VersionedParquetTable(str(tmp_path / "dst"))
+    table.overwrite(
+        spark.range(12)
+        .select(
+            (
+                F.lit("2023-10-28 22:00:00").cast("timestamp")
+                + F.make_dt_interval(mins=F.col("id") * 30)
+            ).alias("Time")
+        )
+        .crossJoin(spark.createDataFrame([("A",), ("B",)], "City_Name string"))
+        .withColumn("Temperature", F.lit(1.0))
+        .repartition(4)
+    )
+    key = "Time = TIMESTAMP '2023-10-29 00:30:00' AND City_Name = 'A'"
+    assert table.read(spark).filter(key).count() == 1
+    batch = spark.sql(
+        "SELECT TIMESTAMP '2023-10-29 00:30:00' AS Time, 'A' AS City_Name, "
+        "99.0D AS Temperature"
+    )
+    table.upsert(spark, batch, WX_KEYS)
+    out = table.read(spark)
+    assert [r.Temperature for r in out.filter(key).collect()] == [99.0]
+    assert out.count() == 24 and _linked_files(table)
+
+
+def test_file_pruned_upsert_over_int96_files_matches_model(
+    spark, tmp_path, file_pruned
+):
+    """Files written before the table stored micros hold ``Time`` as
+    INT96, which takes no pushed filter. The key-scan range filter still
+    applies to them row by row, so upserts over a mix of INT96 and
+    INT64 files give the dict model's rows."""
+    import pyarrow.parquet as pq
+
+    from openweathermapapi_etl_spark.session import conf_window
+
+    table = VersionedParquetTable(str(tmp_path / "int96"))
+    with conf_window(spark, {"spark.sql.parquet.outputTimestampType": "INT96"}):
+        table.overwrite(_wx(spark, SEED).repartition(4))
+    d = table._version_dir(1)
+    assert {
+        pq.ParquetFile(os.path.join(d, f)).metadata.schema.column(0).physical_type
+        for f in table._data_file_sizes(1)
+    } == {"INT96"}
+    model = {(t, c): v for t, c, v in SEED}
+    batches = (
+        [(_t(1), "A", 11.0), (_t(9), "B", 9.0)],
+        [(None, "A", 5.0), (_t(3), "B", 33.0), (_t(9), "B", 90.0)],
+        [(_t(0), "A", 0.5), (_t(10), "A", 10.0)],
+    )
+    for batch in batches:
+        table.upsert(spark, _wx(spark, batch), WX_KEYS)
+        model.update({(t, c): v for t, c, v in batch})
+        want = sorted(
+            ((t, c, v) for (t, c), v in model.items()),
+            key=lambda r: (r[0] is not None, r[0] or 0, r[1]),
+        )
+        assert _wx_rows(table, spark) == want
+        assert _linked_files(table)  # the pruned path ran
+
+
+def test_file_pruned_null_time_batch_replaces_null_time_row(
+    spark, tmp_path, file_pruned
+):
+    """A batch whose only key has a NULL ``Time`` has no range: the key
+    scan keeps just the NULL group, finds the file holding the table's
+    NULL-``Time`` row and rewrites that file alone."""
+    table = _seeded(spark, tmp_path)
+    table.upsert(spark, _wx(spark, [(None, "A", 5.0)]), WX_KEYS)
+    want = sorted((r for r in SEED if r[0] is not None), key=lambda r: (r[0], r[1]))
+    assert _wx_rows(table, spark) == [(None, "A", 5.0)] + want
+    assert len(_linked_files(table)) == 3
+
+
+def test_table_files_store_time_as_int64_micros_with_statistics(
+    spark, tmp_path, file_pruned
+):
+    """Every data file of a table stores ``Time`` as INT64 micros with
+    min/max statistics and a column index, the page statistics the
+    file-pruned key scan skips pages by, compressed with zstd."""
+    import pyarrow.parquet as pq
+
+    table = _seeded(spark, tmp_path)
+    table.upsert(spark, _wx(spark, [(_t(9), "B", 9.0), (_t(0), "A", 7.0)]), WX_KEYS)
+    v = table.current_version()
+    files = table._data_file_sizes(v)
+    assert len(files) > 4  # seed files, a rewritten one and the new keys
+    for f in files:
+        md = pq.ParquetFile(os.path.join(table._version_dir(v), f)).metadata
+        col = md.schema.column(0)
+        assert (col.name, col.physical_type) == ("Time", "INT64")
+        logical = json.loads(col.logical_type.to_json())
+        assert (logical["Type"], logical["timeUnit"]) == ("Timestamp", "microseconds")
+        for rg in range(md.num_row_groups):
+            chunk = md.row_group(rg).column(0)
+            assert chunk.compression == "ZSTD" and chunk.has_column_index
+            stats = chunk.statistics
+            assert stats.has_min_max or stats.null_count == stats.num_values
+
+
+def test_failed_stage_removes_its_slot(spark, tmp_path, file_pruned, monkeypatch):
+    """A hard-link failure after the claim removes the claimed slot and
+    its in-flight dirs before re-raising: no ``v=N`` is left to surface
+    as an ``unlogged-orphan`` once later commits pass it, and the table
+    reads its pre-failure rows."""
+    from openweathermapapi_etl_spark.operators.merge import version_states
+
+    table = _seeded(spark, tmp_path)
+    versions, before = table.versions(), _wx_rows(table, spark)
+
+    def broken_link(src, dst):
+        raise OSError(5, "injected link failure")
+
+    with monkeypatch.context() as m:
+        m.setattr(VersionedParquetTable, "_link_file", staticmethod(broken_link))
+        with pytest.raises(OSError, match="injected"):
+            table.upsert(spark, _wx(spark, [(_t(0), "A", 7.0)]), WX_KEYS)
+    assert table.versions() == versions and not table.inflight_dirs()
+    assert _wx_rows(table, spark) == before
+    for h in range(4):
+        table.upsert(spark, _wx(spark, [(_t(h), "B", 20.0 + h)]), WX_KEYS)
+    assert "unlogged-orphan" not in dict(version_states(table)).values()
+    assert (_t(3), "B", 23.0) in _wx_rows(table, spark)
+
+
+def test_partitioned_read_through_sidecar_matches_inference_without_a_job(
+    spark, tmp_path
+):
+    """A version is read through its sidecar schema, so building the
+    frame runs no Spark job (Parquet schema inference ran one), and a
+    partitioned version keeps what inference gives: the partition
+    column last, typed from its dir names (``int`` for the string
+    values ``"1"``/``"2"`` here), whatever its place and type in the
+    written frame."""
+    table = VersionedParquetTable(str(tmp_path / "p"), partition_by="val")
+    table.overwrite(
+        spark.createDataFrame(
+            [("a", "1", 1), ("b", "2", 2)], "k string, val string, n int"
+        )
+    )
+    inferred = spark.read.parquet(table._version_dir(1))
+    sc = spark.sparkContext
+    group = f"sidecar_read_{os.getpid()}"
+    sc.setJobGroup(group, group)
+    try:
+        out = table.read(spark)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert not sc.statusTracker().getJobIdsForGroup(group)
+    assert out.schema.simpleString() == inferred.schema.simpleString()
+    assert out.schema.simpleString() == "struct<k:string,n:int,val:int>"
+    assert _rows(out) == _rows(inferred) == {("a", 1, 1), ("b", 2, 2)}

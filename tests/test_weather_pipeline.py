@@ -8,6 +8,7 @@ import datetime
 import json
 import os
 import random
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -884,6 +885,13 @@ def test_tick_batch_is_local_relation_and_merge_never_shuffles_table(
             assert not [n for n in above if "Exchange" in n], (frame, above)
         joins = [name for name, _ in nodes if "Join" in name]
         assert joins and all(j.startswith("Broadcast") for j in joins), (frame, joins)
+    # The key scan is range-filtered on Time and the filter reaches the
+    # Parquet reader, whose page statistics skip pages outside the batch.
+    detect_plan = seen["detect"]._jdf.queryExecution().executedPlan().toString()
+    scan_lines = [ln for ln in detect_plan.splitlines() if "FileScan parquet" in ln]
+    assert scan_lines and all(
+        re.search(r"PushedFilters: \[[^\]]*\bTime\b", ln) for ln in scan_lines
+    ), scan_lines
     out = table.read(spark)
     assert out.count() == len(history) + 2
     latest_a = out.filter(
